@@ -726,6 +726,37 @@ def _vocab_layout(words: DataFrame, rows_per_partition: int = 50_000) -> DataFra
     return words.coalesce(target) if target < current else words
 
 
+def _second_merge_safe(
+    head: list[tuple[str, str, int]], created: set[str]
+) -> bool:
+    """True iff the runner-up pair of one argmax job is provably the NEXT
+    round's winner, so ``bpe_train`` may merge both from that one job.
+
+    ``head`` is the top three (left, right, count) rows of the pair
+    ranking and ``created`` the symbols that earlier merges produced.
+    Merging p1 = (a, b) with a != b only DECREASES the pairs (x, a) and
+    (b, y), and each occurrence of a NEW pair (x, ab) / (ab, y) /
+    (ab, ab) consumes one occurrence of such a pair, so its count is at
+    most a pre-merge count from those classes — provided ab is not
+    already a symbol (then the new occurrences would ADD to an existing
+    pair's count). So if p2 is in neither class and strictly beats the
+    third row, p2 is unchanged while every other pair ends at or below
+    the third count: p2 wins round r+1 regardless of tie-break. Refused:
+    a self-pair (a == b: p1 itself bounds the new (aa, a) pairs), an ab
+    that an earlier merge already created, and a head of fewer than
+    three rows."""
+    if len(head) < 3:
+        return False
+    (a, b, _), (a2, b2, c2), (_, _, c3) = head
+    return (
+        a != b
+        and a + b not in created
+        and b2 != a
+        and a2 != b
+        and c2 > c3
+    )
+
+
 def bpe_train(
     docs: DataFrame,
     merges: int = C.BPE_MERGES,
@@ -784,50 +815,35 @@ def bpe_train(
         )
 
     trajectory: list[tuple[int, str, str, int]] = []
+    created: set[str] = set()
     rank = 1
     rounds_applied = 0
     while rank <= merges:
-        # One argmax job can safely yield TWO consecutive merge rounds
-        # (r17, VERDICT r16 #7 — batch the per-round argmax; the rounds
-        # were pure job latency on a coalesced vocab). Soundness: after
-        # merging p1 = (a, b), the only pre-existing pairs whose counts
-        # can CHANGE are {(x, a)} (their right element may fuse into ab)
-        # and {(b, y)} (their left element may fuse) — both only ever
-        # DECREASE — and the only NEW pairs are (x, ab) / (ab, y) /
-        # (ab, ab), each bounded above by a pre-count from those same
-        # classes (every occurrence consumes one such adjacency). So if
-        # the head row p2 directly under p1 (i) is NOT in either class
-        # and (ii) STRICTLY beats the third row's count, then after p1's
-        # merge p2 is unchanged while every other pair — decreased,
-        # unchanged or new — sits at or below the third count, strictly
-        # under p2: p2 is round r+1's winner regardless of tie-break.
-        # The guard is exact (no approximation); when it fails the loop
-        # simply falls back to one merge for this job. The trajectory is
-        # bit-identical to the sequential form (equivalence-pinned).
-        head = (
-            words.filter(F.size("s") >= 2)
+        # One argmax job yields TWO consecutive merge rounds whenever
+        # _second_merge_safe proves the runner-up is round r+1's winner
+        # (r17, VERDICT r16 #7 — the rounds were pure job latency on a
+        # coalesced vocab); otherwise this job yields one merge. The
+        # trajectory is bit-identical to the sequential form
+        # (equivalence- and property-pinned).
+        head = [
+            (r["p"]["a"], r["p"]["b"], int(r["cnt"]))
+            for r in words.filter(F.size("s") >= 2)
             .select("freq", F.explode(pairs_expr).alias("p"))
             .groupBy("p")
             .agg(F.sum("freq").alias("cnt"))
             .orderBy(F.desc("cnt"), F.col("p.a"), F.col("p.b"))
             .limit(3)
             .collect()
-        )
+        ]
         if not head:
             break
-        a, b, cnt = head[0]["p"]["a"], head[0]["p"]["b"], head[0]["cnt"]
-        trajectory.append((rank, a, b, int(cnt)))
-        rank += 1
-        picks = [(a, b)]
-        if rank <= merges and len(head) >= 2:
-            p2 = head[1]["p"]
-            changed_class = p2["b"] == a or p2["a"] == b
-            beats_third = len(head) < 3 or head[1]["cnt"] > head[2]["cnt"]
-            if not changed_class and beats_third:
-                trajectory.append((rank, p2["a"], p2["b"], int(head[1]["cnt"])))
-                picks.append((p2["a"], p2["b"]))
-                rank += 1
-        for pa, pb in picks:
+        batch = rank < merges and _second_merge_safe(head, created)
+        picks = head[:2] if batch else head[:1]
+        for a, b, cnt in picks:
+            trajectory.append((rank, a, b, cnt))
+            created.add(a + b)
+            rank += 1
+        for pa, pb, _ in picks:
             rounds_applied += 1
             if rank <= merges:  # the final round's merge is never materialized
                 words = words.select(apply_merge_expr(pa, pb).alias("s"), "freq")

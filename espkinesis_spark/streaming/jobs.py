@@ -1,14 +1,19 @@
 """Driver-checkable streaming queries.
 
-Each job replays a file source with ``trigger(availableNow=True)`` into a
-memory sink and returns the drained result as a batch DataFrame. The three
-jobs are the streaming forms of batch queries with DuckDB oracles, so the
-driver's correctness gate checks streaming semantics too:
+Each job replays a fixture table as a file stream and drains it through
+``run_stream``, the one drain path: availableNow trigger, a fixed
+state-partition policy, plan capture, and the memory sink (summary-sized
+stores, result legs) or the parquet file sink (corpus-sized stores).
+Every job is the streaming form of a batch query with a DuckDB oracle,
+so the driver's correctness gate checks streaming semantics too, e.g.:
 
   * latest_per_user_stream  == DQ-07 (last-value-per-key, A2/A3)
   * window_counts_stream    == hourly tumbling counts (A4/T3 analog)
   * override_asof_stream    == DQ-09 (stateful as-of, A5) via
     applyInPandasWithState
+
+The two round-trip jobs instead run the K1/K3 sink constructors under
+test and read back what they delivered.
 """
 
 from __future__ import annotations
@@ -67,16 +72,19 @@ def _ensure_symlink(src_file: str, link: str) -> None:
         pass
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # FileStreamSource requires a *directory*; expose the single parquet
-    # file through a symlink dir (testdata itself is read-only).
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Replayable stream over one fixture table. FileStreamSource requires
+    a *directory*; expose the single parquet file through a symlink dir
+    (testdata itself is read-only)."""
     ensure_session_confs(spark)
-    src_file = os.path.abspath(table_path(sf_dir, "events"))
+    src_file = os.path.abspath(table_path(sf_dir, table))
     stream_dir = os.path.join(
         tempfile.gettempdir(), "espk_stream", src_file.strip("/").replace("/", "_")
     )
     os.makedirs(stream_dir, exist_ok=True)
-    _ensure_symlink(src_file, os.path.join(stream_dir, "events.parquet"))
+    _ensure_symlink(src_file, os.path.join(stream_dir, f"{table}.parquet"))
+    if table != "events":
+        return spark.readStream.schema(SCHEMAS[table]).parquet(stream_dir)
     # probe the on-disk ts encoding via a footer-only batch read, then
     # declare the matching stream schema and normalize at the edge
     ts_dtype = dict(spark.read.parquet(src_file).dtypes)["ts"]
@@ -84,11 +92,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize_ts(raw, ts_dtype)
 
 
-# Executed micro-batch physical plans, keyed by query name — recorded at
-# every drain site so tools/plan_sweep.py's streaming leg can apply the
-# same red-flag greps the batch entries get (a streaming DataFrame's plan
-# only materializes once a query runs, so the sweep can't explain() the
-# unstarted frame).
+# Executed micro-batch physical plans, keyed by query name — recorded by
+# run_stream and the round-trip jobs so tools/plan_sweep.py's streaming
+# leg can apply the same red-flag greps the batch entries get (a
+# streaming DataFrame's plan only materializes once a query runs, so the
+# sweep can't explain() the unstarted frame).
 LAST_STREAM_PLANS: dict[str, str] = {}
 
 
@@ -152,21 +160,46 @@ def _fresh_store_error(exc: Exception) -> bool:
     return False
 
 
-def _drain_to_parquet(
-    df: DataFrame, name: str, *, base: str | None = None, resume: bool = False
+# State-store partitions of every drain query. A stateful query's state
+# layout is its shuffle partitioning, fixed at the first checkpoint, so
+# the count is one policy set here rather than derived per call. Each
+# partition pays a fixed store open/commit cost per micro-batch (r13:
+# 32 -> 8 measured 3x on the replay jobs), while a single partition
+# serializes applyInPandasWithState (st_override_asof at sf0.1 on 4
+# cores: 1 partition 5.57 s, 4 -> 2.55 s, 8 -> 3.05 s). Capped at the
+# cluster's default parallelism so a small cluster gets one per core.
+STATE_PARTITIONS = 8
+
+
+def run_stream(
+    df: DataFrame,
+    name: str,
+    mode: str = "append",
+    *,
+    parquet: bool = False,
+    base: str | None = None,
+    resume: bool = False,
 ) -> DataFrame:
-    """Append-mode drain for CORPUS-SIZED extraction stores (token /
-    span-hash tables): a parquet file sink, read back as a batch frame.
+    """The one drain path: replay ``df`` with ``trigger(availableNow=True)``
+    under the ``STATE_PARTITIONS`` policy, record its last micro-batch
+    plan, and return the drained rows as a batch DataFrame.
 
-    The memory sink collects every row to the driver single-threaded —
-    fine for sketch/fingerprint-sized stores, but a corpus-sized store
-    through it reads as the op's cost at scale (st_bm25's first ladder:
-    48x wall at ~50x tokens, almost all drain). The file sink writes
-    executor-side in parallel and IS the production shape — a streaming
-    extraction job lands its narrow tables in a durable store, and the
-    analysis reads that store (measured: st_bm25 48x -> ~8x).
+    Two sinks, chosen by the store's class:
+      * memory (default): summary-sized stores (sketches, complete-mode
+        aggregates, top-k) and result legs — the harness collects the
+        whole result anyway, so the memory sink is merely the collect
+        moved earlier. Returns the sink table ``name``.
+      * ``parquet=True``: CORPUS-SIZED extraction stores (token /
+        span-hash tables). The memory sink collects every row to the
+        driver single-threaded, and a corpus-sized store through it
+        reads as the op's cost at scale (st_bm25's first ladder: 48x
+        wall at ~50x tokens, almost all drain). The append-mode file
+        sink writes executor-side in parallel and IS the production
+        shape — a streaming extraction job lands its narrow tables in a
+        durable store, and the analysis reads that store (measured:
+        st_bm25 48x -> ~8x). Returns the schema-pinned read-back.
 
-    Two modes (VERDICT r11 #3):
+    The parquet drain has two modes (VERDICT r11 #3):
       * fresh (default): rmtree the store+checkpoint first — hermetic,
         every call re-extracts. Right for the replay fixtures, WRONG for
         a production restart: at 100 TB a driver restart must not
@@ -195,6 +228,8 @@ def _drain_to_parquet(
     """
     import shutil
 
+    if not parquet and (base is not None or resume):
+        raise ValueError("base and resume apply to the parquet drain only")
     if resume and base is None:
         # an applicationId-scoped default changes on every driver restart,
         # so a resume against it would never find the checkpoint and would
@@ -272,150 +307,45 @@ def _drain_to_parquet(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    if base is None:
-        # scope by application id: the memory sink was implicitly
-        # per-session, a bare /tmp path is not — two concurrent sessions
-        # (driver gate + a local run) would race on rmtree/write otherwise
-        app_id = spark.sparkContext.applicationId
-        base = os.path.join(tempfile.gettempdir(), "espk_drain", app_id, name)
-    if not resume:
-        shutil.rmtree(base, ignore_errors=True)
-    out_dir, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    query = (
-        df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    writer = (
+        df.writeStream.outputMode(mode).queryName(name).trigger(availableNow=True)
     )
-    query.awaitTermination()
-    _record_stream_plan(query)
+    if parquet:
+        if base is None:
+            # scope by application id: the memory sink was implicitly
+            # per-session, a bare /tmp path is not — two concurrent sessions
+            # (driver gate + a local run) would race on rmtree/write otherwise
+            app_id = spark.sparkContext.applicationId
+            base = os.path.join(tempfile.gettempdir(), "espk_drain", app_id, name)
+        if not resume:
+            shutil.rmtree(base, ignore_errors=True)
+        out_dir, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
+        writer = (
+            writer.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+        )
+    else:
+        writer = writer.format("memory")
+    # shuffle.partitions is captured at query start, so the temporary
+    # override pins only this query's state layout
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(min(STATE_PARTITIONS, spark.sparkContext.defaultParallelism)),
+    )
+    try:
+        query = writer.start()
+        query.awaitTermination()
+        _record_stream_plan(query)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if not parquet:
+        return spark.table(name)
     # a zero-row stream leaves no sink directory — materialize it so the
     # schema-pinned read returns an empty frame instead of failing
     os.makedirs(out_dir, exist_ok=True)
     return spark.read.schema(df.schema).parquet(out_dir)
-
-
-# Target state rows per state-store partition. Each stateful-operator
-# partition costs a fixed per-micro-batch overhead (task + store open /
-# commit / snapshot), so the partition count should track the STATE
-# cardinality, not the session's compute parallelism: at a 250k-key
-# target a partition's store stays ~tens of MB while tiny replay
-# fixtures derive 1-2 partitions instead of paying 8-32 stores per
-# batch. Upper-bounded at 4x the cluster's default parallelism so a
-# 100 TB key space still spreads over every core with skew headroom
-# (state partitions are pinned at first checkpoint — oversizing beats
-# resizing). r17 measurement note: at sf0.1 the choice measured FLAT
-# across 1/2/4/8 partitions (the per-store overhead is no longer the
-# floor after the r13 32->8 cut), so the derivation is a scale-story
-# parameterization, not a local win.
-STATE_ROWS_PER_PARTITION = 250_000
-
-
-def _state_partitions(spark: SparkSession, source_rows: int | None) -> str:
-    """Derived state-store partition count for one streaming query:
-    ESPK_STREAM_STATE_PARTITIONS overrides; otherwise ceil(source_rows /
-    STATE_ROWS_PER_PARTITION) — source rows upper-bound the state keys —
-    clamped to [1, 4 x defaultParallelism]. An unknown source size falls
-    back to the cluster's default parallelism (the cluster-true choice;
-    every in-repo job passes its source's footer row count)."""
-    env = os.environ.get("ESPK_STREAM_STATE_PARTITIONS")
-    if env:
-        return env
-    hi = 4 * spark.sparkContext.defaultParallelism
-    if source_rows is None:
-        return str(spark.sparkContext.defaultParallelism)
-    return str(max(1, min(-(-source_rows // STATE_ROWS_PER_PARTITION), hi)))
-
-
-def _drain_complete_to_parquet(
-    df: DataFrame, name: str, source_rows: int | None = None
-) -> DataFrame:
-    """Executor-parallel drain for COMPLETE-mode results whose size tracks
-    the corpus (st_session_window's ~one-session-per-active-user result):
-    the file sink rejects complete output, so foreachBatch overwrites a
-    parquet snapshot of the full state each trigger — workers write in
-    parallel, the driver holds nothing, and the last trigger's snapshot
-    IS the declared result. Opt-in via ESPK_RESULT_SINK=parquet, routed
-    for EVERY complete-mode leg from ``_drain_to_memory`` (one policy
-    point): the default memory route stays the harness shape — the
-    harness collects the whole result anyway, so the memory sink is
-    merely the collect moved earlier — while a production job flips the
-    env var and lands every complete-mode result durably without a
-    driver-memory copy. Same availableNow replay + plan capture as the
-    other drains."""
-    import shutil
-
-    spark = df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    app_id = spark.sparkContext.applicationId
-    base = os.path.join(tempfile.gettempdir(), "espk_drain", app_id, name)
-    shutil.rmtree(base, ignore_errors=True)
-    out_dir, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, source_rows)
-    )
-    try:
-        query = (
-            df.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch_df, _id: batch_df.write.mode("overwrite").parquet(out_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        _record_stream_plan(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    os.makedirs(out_dir, exist_ok=True)
-    return spark.read.schema(df.schema).parquet(out_dir)
-
-
-def _drain_to_memory(
-    df: DataFrame, name: str, mode: str, source_rows: int | None = None
-) -> DataFrame:
-    # ESPK_RESULT_SINK=parquet: production jobs opt every COMPLETE-mode
-    # result leg into the executor-parallel snapshot drain (durable, no
-    # driver copy) — one policy point for all of them. The memory sink
-    # stays the default: it IS the declared result the harness collects.
-    if mode == "complete" and os.environ.get("ESPK_RESULT_SINK") == "parquet":
-        return _drain_complete_to_parquet(df, name, source_rows)
-    spark = df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    # Stateful operators pay a fixed per-partition state-store cost each
-    # micro-batch, so the partition count must track key cardinality, not
-    # the session default (measured 3x on the replay jobs: 32 -> 8
-    # partitions in r13; r17 derives it from the source's footer row
-    # count via _state_partitions — scale-adaptive, env-overridable).
-    # shuffle.partitions is captured at query start, so the temporary
-    # override pins only this query's state layout.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, source_rows)
-    )
-    try:
-        query = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        _record_stream_plan(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
 
 
 # Crossover for the routed per-row drain below: under these SOURCE
@@ -425,7 +355,7 @@ def _drain_to_memory(
 # all drain). TWO bounds because the store's driver footprint scales
 # with source ROW COUNT, not bytes — a corpus of millions of tiny docs
 # stays under any byte bound yet pushes millions of rows through the
-# memory sink (r11 ADVICE). Both overridable for tests / cluster sizing.
+# memory sink (r11 ADVICE).
 MEMORY_DRAIN_MAX_SOURCE_BYTES = 256 << 20
 MEMORY_DRAIN_MAX_SOURCE_ROWS = 1_000_000
 
@@ -433,39 +363,35 @@ MEMORY_DRAIN_MAX_SOURCE_ROWS = 1_000_000
 def _drain_rowstore(
     df: DataFrame, name: str, sf_dir: str, table: str = "documents"
 ) -> DataFrame:
-    """Routed drain for per-SOURCE-ROW intermediate stores (one narrow
-    fingerprint row per document) that downstream analysis consumes.
+    """Routed ``run_stream`` for per-SOURCE-ROW intermediate stores (one
+    narrow fingerprint row per document) that downstream analysis
+    consumes.
 
-    Three store classes, three drains (the shared policy):
+    Three store classes, one drain path (``run_stream``):
       * summary-sized (sketches, complete-mode aggregates, top-k): the
-        memory sink via ``_drain_to_memory`` — bounded by design.
+        memory sink, ``run_stream(df, name, mode)`` — bounded by design.
       * per-source-row narrow stores (perceptual fingerprints): THIS
         router. One row per document is fine through the driver memory
-        sink at fixture scale but still corpus-proportional, so above a
-        source-size bound the store crosses to the executor-parallel
-        parquet drain (the same size-routed style as
+        sink at fixture scale but still corpus-proportional, so above
+        ``MEMORY_DRAIN_MAX_SOURCE_ROWS`` or
+        ``MEMORY_DRAIN_MAX_SOURCE_BYTES`` the store crosses to the
+        executor-parallel parquet sink (the same size-routed style as
         dedup.apply_drop_set's broadcast-vs-shuffled anti-join).
       * corpus-sized stores (token/span/shingle tables, per-EVENT rows —
         several rows per document or fact-table-sized): always
-        ``_drain_to_parquet`` per the r8 discipline; never routed here.
+        ``run_stream(df, name, parquet=True)`` per the r8 discipline;
+        never routed here.
 
     The route is decided from the source table's parquet FOOTERS before
     the stream runs: row count (num_rows — the store is one row per
     source row, so this is the store's actual driver footprint) with an
-    on-disk byte bound as a belt-and-braces second trigger. Both
-    overridable (ESPK_MEMORY_DRAIN_MAX_ROWS / _BYTES) so tests pin all
-    routes."""
-    byte_bound = int(
-        os.environ.get("ESPK_MEMORY_DRAIN_MAX_BYTES", MEMORY_DRAIN_MAX_SOURCE_BYTES)
-    )
-    row_bound = int(
-        os.environ.get("ESPK_MEMORY_DRAIN_MAX_ROWS", MEMORY_DRAIN_MAX_SOURCE_ROWS)
-    )
+    on-disk byte bound as a belt-and-braces second trigger."""
     files = _source_files(table_path(sf_dir, table))  # ONE directory walk
-    rows = _rows_of(files)
-    if _bytes_of(files) > byte_bound or rows > row_bound:
-        return _drain_to_parquet(df, name)
-    return _drain_to_memory(df, name, "append", source_rows=rows or None)
+    big = (
+        _bytes_of(files) > MEMORY_DRAIN_MAX_SOURCE_BYTES
+        or _rows_of(files) > MEMORY_DRAIN_MAX_SOURCE_ROWS
+    )
+    return run_stream(df, name, parquet=big)
 
 
 def _source_files(path: str) -> list[str]:
@@ -508,53 +434,32 @@ def _rows_of(files: list[str]) -> int:
     return total
 
 
-def _table_rows(sf_dir: str, table: str) -> int | None:
-    """Footer row count of a job's source table, for the state-partition
-    derivation (None when the table is missing — the stream's own reader
-    raises the clearer error; the derivation then falls back to the
-    cluster default). One footer read per drain call — metadata-only."""
-    files = _source_files(table_path(sf_dir, table))
-    return _rows_of(files) if files else None
-
-
-def _source_bytes(path: str) -> int:
-    """On-disk bytes of a parquet source (os.path.getsize on a directory
-    returns the ~4 KB inode size, which would silently pin the router to
-    the memory sink forever — sum the files underneath instead)."""
-    return _bytes_of(_source_files(path))
-
-
-def _source_rows(path: str) -> int:
-    """Exact row count of a parquet source, via ``_rows_of``."""
-    return _rows_of(_source_files(path))
-
-
 def latest_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A2/A3: last event per user via max_by aggregation
     (complete mode). Ties on ts break by event_id, matching DQ-07."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy("user_id").agg(
         F.expr("max_by(struct(event_type, value), struct(ts, event_id))").alias("m")
     )
     out = agg.select("user_id", F.col("m.event_type").alias("event_type"), F.col("m.value").alias("value"))
-    return _drain_to_memory(out, "st_latest_user_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    return run_stream(out, "st_latest_user_sink", "complete")
 
 
 def window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A4/T3: tumbling 1h snapshot counts per event type."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy(F.window("ts", "1 hour").alias("win"), "event_type").agg(
         F.count("*").alias("n")
     )
     out = agg.select(F.col("win.start").alias("w"), "event_type", "n")
-    return _drain_to_memory(out, "st_window_counts_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    return run_stream(out, "st_window_counts_sink", "complete")
 
 
 def override_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A5: per-key as-of state via applyInPandasWithState."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     out = st.asof_override(src)
-    return _drain_to_memory(out, "st_override_asof_sink", "append", source_rows=_table_rows(sf_dir, "events"))
+    return run_stream(out, "st_override_asof_sink")
 
 
 def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,39 +468,26 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the key goes quiet for the gap. ``session_window`` merges while
     ``next_ts < prev_ts + gap`` (window end exclusive), so the batch oracle
     breaks sessions on ``diff >= gap``."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id").agg(
         F.count("*").alias("n"), F.max("event_id").alias("last_event")
     )
     out = agg.select("user_id", F.col("sw.start").alias("s_start"), "n", "last_event")
     # This result leg is corpus-proportional (~one session per active
-    # user) — the r11 VERDICT design-note-b case for the
-    # ESPK_RESULT_SINK=parquet opt-in, which _drain_to_memory routes for
-    # every complete-mode leg from one policy point.
-    return _drain_to_memory(out, "st_session_window_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    # user), but it IS the declared result: the harness collects it
+    # anyway, so the memory sink only moves that collect earlier.
+    return run_stream(out, "st_session_window_sink", "complete")
 
 
 def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (1 h long, 30 min slide) per event type —
     every event lands in exactly two windows."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type").agg(
         F.count("*").alias("n")
     )
     out = agg.select(F.col("win.start").alias("w_start"), "event_type", "n")
-    return _drain_to_memory(out, "st_sliding_counts_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replayable documents stream (symlink-dir trick, as for events)."""
-    ensure_session_confs(spark)
-    src_file = os.path.abspath(table_path(sf_dir, "documents"))
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), "espk_stream", src_file.strip("/").replace("/", "_")
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    _ensure_symlink(src_file, os.path.join(stream_dir, "documents.parquet"))
-    return spark.readStream.schema(SCHEMAS["documents"]).parquet(stream_dir)
+    return run_stream(out, "st_sliding_counts_sink", "complete")
 
 
 def content_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,10 +497,10 @@ def content_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature set (deterministic regardless of which doc wins a bucket)."""
     from espkinesis_spark.functions import dedup
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     signed = dedup.simhash(src)  # mapInPandas works on streaming DataFrames
     out = signed.dropDuplicates(["simhash"]).select("simhash")
-    return _drain_to_memory(out, "st_content_dedup_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(out, "st_content_dedup_sink")
 
 
 def image_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -630,7 +522,7 @@ def image_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_gray_bmp,
     )
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     hashes = image_dhash(synthesize_gray_bmp(src))
     store = _drain_rowstore(hashes, "st_image_neardup_sink", sf_dir)
     return hamming_neardup(store, max_hamming=C.IMG_HAM_MAX)
@@ -647,7 +539,7 @@ def dedup_substring_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact."""
     from espkinesis_spark.functions import dedup
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     occ, tok = dedup.dup_spans_tables(src)
     # the token store feeds two analysis branches (totals + kept) — a
     # memory-sink view cannot appear twice in one plan (the st_anomaly
@@ -655,8 +547,8 @@ def dedup_substring_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized stores -> parquet drains (executor-parallel; a
     # file-backed frame can also feed both analysis branches without the
     # memory-sink twice-in-plan hazard)
-    occ_store = _drain_to_parquet(occ, "st_dedup_substring_occ_sink")
-    tok_store = _drain_to_parquet(tok, "st_dedup_substring_tok_sink")
+    occ_store = run_stream(occ, "st_dedup_substring_occ_sink", parquet=True)
+    tok_store = run_stream(tok, "st_dedup_substring_tok_sink", parquet=True)
     return dedup.dup_spans_apply_from(occ_store, tok_store)
 
 
@@ -677,7 +569,7 @@ def image_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from espkinesis_spark.tables import load_table
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     hashes = image_dhash(synthesize_gray_bmp(src))
     store = _drain_rowstore(hashes, "st_image_dedup_apply_sink", sf_dir)
     pairs = hamming_neardup(store, max_hamming=C.IMG_HAM_MAX).select(
@@ -706,12 +598,12 @@ def bm25_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch extraction, so ex_bm25's oracle is exact."""
     from espkinesis_spark.functions import text as T
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     tok = T.bm25_tokens(src)
     # corpus-sized store -> parquet drain (executor-parallel, the durable
     # production shape); no localCheckpoint needed — a file-backed frame
     # can appear in many plan branches
-    store = _drain_to_parquet(tok, "st_bm25_sink")
+    store = run_stream(tok, "st_bm25_sink", parquet=True)
     return T.bm25_from_tokens(store)
 
 
@@ -729,7 +621,7 @@ def audio_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from espkinesis_spark.tables import load_table
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     hashes = audio_envelope_hash(synthesize_tone_wav(src))
     store = _drain_rowstore(hashes, "st_audio_dedup_apply_sink", sf_dir)
     pairs = hamming_neardup(store, max_hamming=C.AUD_HAM_MAX).select(
@@ -764,12 +656,12 @@ def video_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from espkinesis_spark.tables import load_table
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     frames = sample_frames(attach_binary(src))
     # several keyframe rows PER document (sample_frames explodes the
     # payload) — the corpus-sized class _drain_rowstore excludes, so
     # this store always takes the executor-parallel parquet drain
-    store = _drain_to_parquet(frames, "st_video_dedup_apply_sink")
+    store = run_stream(frames, "st_video_dedup_apply_sink", parquet=True)
     pairs = shared_frame_neardup(store).select(
         F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
@@ -798,9 +690,9 @@ def containment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares ex_containment_dedup's oracle."""
     from espkinesis_spark.functions import dedup
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     sh = dedup.shingles(src, distinct=False)
-    store = _drain_to_parquet(sh, "st_containment_sink")
+    store = run_stream(sh, "st_containment_sink", parquet=True)
     return dedup.containment_from_shingles(store.distinct())
 
 
@@ -816,7 +708,7 @@ def audio_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_tone_wav,
     )
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     hashes = audio_envelope_hash(synthesize_tone_wav(src))
     store = _drain_rowstore(hashes, "st_audio_neardup_sink", sf_dir)
     return hamming_neardup(store, max_hamming=C.AUD_HAM_MAX)
@@ -833,11 +725,11 @@ def video_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         shared_frame_neardup,
     )
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     frames = sample_frames(attach_binary(src))
     # several keyframe rows per document — always the parquet drain
     # (the _drain_rowstore policy routes only one-row-per-doc stores)
-    store = _drain_to_parquet(frames, "st_video_neardup_sink")
+    store = run_stream(frames, "st_video_neardup_sink", parquet=True)
     return shared_frame_neardup(store)
 
 
@@ -864,11 +756,11 @@ def anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from espkinesis_spark.queries import hourly_zscore_flags
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.count("*").cast("long").alias("n"))
-    counts = _drain_to_memory(agg, "st_anomaly_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    counts = run_stream(agg, "st_anomaly_sink", "complete")
     # the flagging self-joins the snapshot (stats side + probe side); a
     # memory-sink view can't appear twice in one plan (conflicting expr
     # ids), so freeze the calendar-sized table first
@@ -884,9 +776,9 @@ def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation shares the same thresholds/rounding and one oracle."""
     from espkinesis_spark.functions.text import quality_gate_stateless
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     out = quality_gate_stateless(src)
-    return _drain_to_memory(out, "st_quality_gate_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(out, "st_quality_gate_sink")
 
 
 def quality_model_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,9 +789,9 @@ def quality_model_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch pass exactly (exact-integer weight sums), one oracle."""
     from espkinesis_spark.functions.text import quality_model_score
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     out = quality_model_score(src)
-    return _drain_to_memory(out, "st_quality_model_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(out, "st_quality_model_sink")
 
 
 def winnow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -915,9 +807,9 @@ def winnow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_fingerprints,
     )
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     fp = winnow_fingerprints(src)
-    store = _drain_to_parquet(fp, "st_winnow_sink")
+    store = run_stream(fp, "st_winnow_sink", parquet=True)
     return winnow_candidates_from(store)
 
 
@@ -931,9 +823,9 @@ def repetition_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from espkinesis_spark import queries
     from espkinesis_spark.functions import dedup
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     sh = dedup.shingles(src, distinct=False)
-    store = _drain_to_parquet(sh, "st_repetition_sink")
+    store = run_stream(sh, "st_repetition_sink", parquet=True)
     return queries.repetition_stats_from(store)
 
 
@@ -946,8 +838,8 @@ def asof_features_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension. Shares ex_asof_features' oracle."""
     from espkinesis_spark import queries
 
-    ev = _events_stream(spark, sf_dir).select("event_id", "user_id", "ts")
-    store = _drain_to_parquet(ev, "st_asof_sink")
+    ev = _table_stream(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    store = run_stream(ev, "st_asof_sink", parquet=True)
     return queries.asof_feature_frame(spark, sf_dir, store)
 
 
@@ -958,9 +850,9 @@ def lang_id_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch pass exactly; shares ex_lang_id's oracle."""
     from espkinesis_spark.functions.text import lang_id
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     out = lang_id(src).select("doc_id", "lang_pred")
-    return _drain_to_memory(out, "st_lang_id_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(out, "st_lang_id_sink")
 
 
 def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -971,7 +863,7 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle append projection. Shares ex_pii_scrub's oracle."""
     from espkinesis_spark.functions.text import pii_scrub
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     aug = src.withColumn(
         "text",
         F.concat(
@@ -982,7 +874,7 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + F.lit(1_000_000)).cast("string"),
         ),
     )
-    return _drain_to_memory(pii_scrub(aug), "st_pii_scrub_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(pii_scrub(aug), "st_pii_scrub_sink")
 
 
 def text_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -991,8 +883,8 @@ def text_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     st_quality_model shape). Shares ex_text_stats' oracle."""
     from espkinesis_spark.functions.text import text_stats
 
-    src = _documents_stream(spark, sf_dir)
-    return _drain_to_memory(text_stats(src), "st_text_stats_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    src = _table_stream(spark, sf_dir, "documents")
+    return run_stream(text_stats(src), "st_text_stats_sink")
 
 
 def stratified_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1003,11 +895,11 @@ def stratified_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex_stratified_sample's oracle."""
     from espkinesis_spark.functions import sampling
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     out = sampling.stratified_sample(
         src, "lang", rates={"en": 10}, default_pct=50, key_col="doc_id"
     ).select("doc_id", "lang", "source")
-    return _drain_to_memory(out, "st_stratified_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(out, "st_stratified_sink")
 
 
 def hash_split_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1022,10 +914,10 @@ def hash_split_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     st_zorder fix). Shares ex_hash_split's oracle."""
     from espkinesis_spark.functions import sampling
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     split = sampling.hash_split(src, "doc_id", {"train": 90, "val": 5, "test": 5})
     out = split.groupBy("split", "lang").agg(F.count("*").cast("long").alias("n"))
-    return _drain_to_memory(out, "st_hash_split_sink", "complete", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(out, "st_hash_split_sink", "complete")
 
 
 def perplexity_buckets_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1039,9 +931,9 @@ def perplexity_buckets_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is exact."""
     from espkinesis_spark.functions import text as text_fns
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     toks = text_fns.token_positions(src)
-    store = _drain_to_parquet(toks, "st_perplexity_sink")
+    store = run_stream(toks, "st_perplexity_sink", parquet=True)
     return text_fns.perplexity_buckets_from(
         text_fns.bigram_logprob_from_tokens(store)
     )
@@ -1069,7 +961,7 @@ def zorder_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from espkinesis_spark.functions import layout
 
     grid = 1 << C.ZORDER_BITS
-    src = _events_stream(spark, sf_dir).select(
+    src = _table_stream(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.unix_millis("ts").alias("t_ms"),
@@ -1087,7 +979,7 @@ def zorder_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.pmod(F.expr("t_ms div 1000"), F.lit(grid)).cast("long"),
         ).alias("z"),
     )
-    store = _drain_to_parquet(z, "st_zorder_sink")
+    store = run_stream(z, "st_zorder_sink", parquet=True)
     shards = 1 << C.ZORDER_REPORT_BITS
     return store.groupBy(F.pmod(F.col("z"), F.lit(shards)).alias("zshard")).agg(
         F.count("*").cast("long").alias("n"),
@@ -1102,13 +994,13 @@ def vocab_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch token count, so the DuckDB oracle is exact."""
     from espkinesis_spark.functions.text import tokens
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     out = (
         src.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    return _drain_to_memory(out, "st_vocab_sink", "complete", source_rows=_table_rows(sf_dir, "documents"))
+    return run_stream(out, "st_vocab_sink", "complete")
 
 
 def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1125,13 +1017,13 @@ def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from espkinesis_spark.functions import common as C
     from espkinesis_spark.functions.text import exact_share_filter, tokens
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     agg = (
         src.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    counts = _drain_to_memory(agg, "st_heavy_hitters_sink", "complete", source_rows=_table_rows(sf_dir, "documents"))
+    counts = run_stream(agg, "st_heavy_hitters_sink", "complete")
     counts = counts.localCheckpoint(eager=True)
     tot = counts.agg(F.sum("n").cast("long").alias("total"))
     return exact_share_filter(counts, tot, "token", C.HH_K)
@@ -1147,9 +1039,9 @@ def hdr_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     split — shares ex_hdr_quantile's oracle."""
     from espkinesis_spark.functions import quantiles
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     buckets = quantiles.hdr_buckets(src, "value")
-    snap = _drain_to_memory(buckets, "st_hdr_quantile_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    snap = run_stream(buckets, "st_hdr_quantile_sink", "complete")
     return quantiles.hdr_quantiles(snap.localCheckpoint(eager=True))
 
 
@@ -1160,7 +1052,7 @@ def ack_tracker_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_successful_send."""
     from espkinesis_spark.streaming.pipeline import ack_tracker
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     acks = src.select(
         F.col("ts").alias("ack_ts"),
         F.format_string("AA:BB:CC:DD:EE:%02X", (F.col("user_id") % 8 + 1).cast("int")).alias(
@@ -1173,7 +1065,7 @@ def ack_tracker_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, f"AA:BB:CC:DD:EE:{i:02X}") for i in range(1, 9)], "id int, mac string"
     )
     out = ack_tracker(acks, targets, tiebreak="ack_id")
-    return _drain_to_memory(out, "st_ack_tracker_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    return run_stream(out, "st_ack_tracker_sink", "complete")
 
 
 def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1181,9 +1073,9 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kept-key set (not the arbitrary winning row) is the deterministic,
     oracle-checkable output. State is one entry per distinct key — bound it
     in production with ``dropDuplicatesWithinWatermark``."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     out = src.dropDuplicates(["user_id", "event_type"]).select("user_id", "event_type")
-    return _drain_to_memory(out, "st_dedup_sink", "append", source_rows=_table_rows(sf_dir, "events"))
+    return run_stream(out, "st_dedup_sink")
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1194,7 +1086,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sides branch from ONE source (a stream-stream self-join) — a
     second FileStreamSource instance measured ~25% slower and doubles the
     source-offset bookkeeping."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     clicks = (
         src.filter(F.col("event_type") == "click")
         .select(
@@ -1219,7 +1111,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts"))
         & (F.col("p_ts") > F.col("c_ts") - F.expr("INTERVAL 1 HOUR")),
     ).select("click_id", "purchase_id")
-    return _drain_to_memory(joined, "st_stream_join_sink", "append", source_rows=_table_rows(sf_dir, "events"))
+    return run_stream(joined, "st_stream_join_sink")
 
 
 def _command_lines_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1305,7 +1197,7 @@ def command_plane_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cls")
         .agg(F.count("*").alias("n"))
     )
-    return _drain_to_memory(out, "st_command_plane_sink", "complete", source_rows=_rows_of(_source_files(cmd_dir)) or None)
+    return run_stream(out, "st_command_plane_sink", "complete")
 
 
 _ROUNDTRIP_SCHEMA = "event_type string, n long, sum_v double, n_distinct long"
@@ -1352,7 +1244,7 @@ def sink_roundtrip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from espkinesis_spark.streaming.sinks import keyed_foreach_batch_sink
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     out_dir = tempfile.mkdtemp(prefix="espk_sink_rt_")
     data_dir = os.path.join(out_dir, "delivered")
 
@@ -1390,7 +1282,7 @@ def console_roundtrip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     every field)."""
     from espkinesis_spark.streaming.sinks import console_json_sink
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     out_dir = tempfile.mkdtemp(prefix="espk_console_rt_")
     cap = os.path.join(out_dir, "docs")
     query = console_json_sink(

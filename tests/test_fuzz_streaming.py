@@ -55,7 +55,7 @@ state workers in r16 — it self-skips where no protobuf runtime exists):
     #4) — the deterministic resume tests pin two fixed restart shapes;
     this family randomizes WHERE the seam lands: seeded-random chunk
     files are exposed in random prefixes across a random number of
-    jobs._drain_to_parquet(resume=True) legs on one stable base, and
+    jobs.run_stream(parquet=True, resume=True) legs on one stable base, and
     after EVERY seam the store must equal the batch transform over the
     rows exposed so far (exactly-once across any seam placement,
     including nothing-new legs and a seam before the first commit);
@@ -640,7 +640,7 @@ def test_parquet_drain_resume_exactly_once_at_random_seams(
     seam — the corpus is carved into seeded-random-sized chunk files
     (one micro-batch each), a random number of RESTARTS expose random
     file prefixes, and every leg resumes the same drain via
-    jobs._drain_to_parquet(resume=True) on one stable base. After EVERY
+    jobs.run_stream(parquet=True, resume=True) on one stable base. After EVERY
     seam the store must equal the batch transform over exactly the rows
     exposed so far: the count pins no-duplication across the seam (a
     re-read committed batch would append twice), the set compare pins
@@ -710,8 +710,8 @@ def test_parquet_drain_resume_exactly_once_at_random_seams(
             d, f = files[i]
             shutil.copy(f, visible / "data" / f"chunk{i:03d}.parquet")
         exposed = max(exposed, upto)
-        drained = jobs._drain_to_parquet(
-            transform(source()), name, base=base, resume=True
+        drained = jobs.run_stream(
+            transform(source()), name, parquet=True, base=base, resume=True
         )
         if exposed == 0:
             assert drained.count() == 0
@@ -750,7 +750,7 @@ def test_checkpoint_loss_witness_resume_refuses_orphaned_store(
     into a skipped batch id their rows are SILENTLY LOST, and the
     store still reads back cleanly, just short. Silent loss being the
     only failure mode is exactly why the engine now REFUSES the
-    orphaned-store state outright (jobs._drain_to_parquet's
+    orphaned-store state outright (jobs.run_stream's
     checkpoint-consistency guard): this test pins the refusal in both
     the benign shape (same files, same batching — would have
     self-healed) and the lossy shape (new file + coarser batching —
@@ -786,8 +786,8 @@ def test_checkpoint_loss_witness_resume_refuses_orphaned_store(
             r = r.option("maxFilesPerTrigger", 1)
         return r.parquet(str(src_dir / "data"))
 
-    leg1 = jobs._drain_to_parquet(
-        source(max_files=True), "ckptloss", base=base, resume=True
+    leg1 = jobs.run_stream(
+        source(max_files=True), "ckptloss", parquet=True, base=base, resume=True
     )
     assert leg1.count() == len(a)
 
@@ -797,22 +797,22 @@ def test_checkpoint_loss_witness_resume_refuses_orphaned_store(
     # benign-LOOKING shape (same files, same batching) is refused too —
     # indistinguishable from the lossy one at restore time
     with pytest.raises(ValueError, match="committed batches but checkpoint"):
-        jobs._drain_to_parquet(
-            source(max_files=True), "ckptloss", base=base, resume=True
+        jobs.run_stream(
+            source(max_files=True), "ckptloss", parquet=True, base=base, resume=True
         )
 
     # lossy shape: new data + coarser batching — the one that would have
     # silently dropped b's rows into a skipped batch id
     land(b, "b.parquet")
     with pytest.raises(ValueError, match="committed batches but checkpoint"):
-        jobs._drain_to_parquet(
-            source(max_files=False), "ckptloss", base=base, resume=True
+        jobs.run_stream(
+            source(max_files=False), "ckptloss", parquet=True, base=base, resume=True
         )
 
     # recovery path named in the error: a fresh base re-extracts cleanly
     base2 = str(tmp_path_factory.mktemp("ckptloss_base2") / "store")
-    redo = jobs._drain_to_parquet(
-        source(max_files=True), "ckptloss", base=base2, resume=True
+    redo = jobs.run_stream(
+        source(max_files=True), "ckptloss", parquet=True, base=base2, resume=True
     )
     assert redo.count() == len(pdf)
     assert {r[0] for r in redo.collect()} == set(pdf["doc_id"])
@@ -822,8 +822,8 @@ def test_checkpoint_loss_witness_resume_refuses_orphaned_store(
     # committed source batch and silently rebuild a store without them
     shutil.rmtree(_os.path.join(base2, "data"))
     with pytest.raises(ValueError, match="store was lost or replaced"):
-        jobs._drain_to_parquet(
-            source(max_files=True), "ckptloss", base=base2, resume=True
+        jobs.run_stream(
+            source(max_files=True), "ckptloss", parquet=True, base=base2, resume=True
         )
     # ... while offsets-WITHOUT-commits (the crash window between the
     # offset WAL write and the batch commit) stays a legitimate resume:
@@ -831,13 +831,13 @@ def test_checkpoint_loss_witness_resume_refuses_orphaned_store(
     # real run — the restart replays the uncommitted batches, the sink's
     # batch-id log absorbs the rewrite, and the store stays exactly right
     base3 = str(tmp_path_factory.mktemp("ckptloss_base3") / "store")
-    leg = jobs._drain_to_parquet(
-        source(max_files=True), "ckptloss", base=base3, resume=True
+    leg = jobs.run_stream(
+        source(max_files=True), "ckptloss", parquet=True, base=base3, resume=True
     )
     assert leg.count() == len(pdf)
     shutil.rmtree(_os.path.join(base3, "ckpt", "commits"))
-    replayed = jobs._drain_to_parquet(
-        source(max_files=True), "ckptloss", base=base3, resume=True
+    replayed = jobs.run_stream(
+        source(max_files=True), "ckptloss", parquet=True, base=base3, resume=True
     )
     assert replayed.count() == len(pdf)
     assert {r[0] for r in replayed.collect()} == set(pdf["doc_id"])

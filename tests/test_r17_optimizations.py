@@ -9,12 +9,18 @@ one fails HERE with a named kernel):
     direct element accesses == ``array_min(slice(...))`` (tail windows
     shorter than W included on both forms),
   * ``bpe_train``'s guarded two-merges-per-job argmax batching == the
-    sequential one-argmax-per-round loop (same trajectory), including a
-    corpus built so naive (guard-less) batching WOULD be wrong.
+    sequential one-argmax-per-round loop (same trajectory), including
+    corpora built so naive (guard-less) batching WOULD be wrong, and a
+    randomized property test of the batching decision
+    (``_second_merge_safe``) against a pure-Python sequential trainer.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from espkinesis_spark.functions import common as C
@@ -154,3 +160,92 @@ def test_bpe_guard_batches_only_on_strict_separation(spark):
     got = _traj(T.bpe_train(docs, merges=3))
     assert got == _bpe_train_sequential(docs, merges=3)
     assert got == [(1, "a", "b", 4), (2, "c", "d", 3), (3, "e", "f", 3)]
+
+
+def test_bpe_self_pair_refuses_batch(spark):
+    """ADVICE r17 counterexample: p1 = (a, a) is a self-pair, so merging
+    it creates (aa, a) whose count is bounded only by p1's own count —
+    it overtakes the runner-up (c, d) in round 2. Batching must be
+    refused and the trajectory must match the sequential loop."""
+    rows = [(i, "aaa") for i in range(4)] + [(10 + i, "cd") for i in range(3)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = _traj(T.bpe_train(docs, merges=2))
+    assert got == _bpe_train_sequential(docs, merges=2)
+    assert got == [(1, "a", "a", 8), (2, "aa", "a", 4)]
+
+
+def _py_head(words, k):
+    """Top-k (left, right, count) pairs, ranked as bpe_train ranks them."""
+    counts = Counter()
+    for syms, freq in words:
+        for pair in zip(syms, syms[1:]):
+            counts[pair] += freq
+    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+    return [(a, b, c) for (a, b), c in ranked[:k]]
+
+
+def _py_merge(words, a, b):
+    """bpe_train's greedy left-to-right merge fold."""
+    out = []
+    for syms, freq in words:
+        acc = []
+        for x in syms:
+            if acc and acc[-1] == a and x == b:
+                acc[-1] = a + b
+            else:
+                acc.append(x)
+        out.append((acc, freq))
+    return out
+
+
+def _py_sequential(words, merges):
+    trajectory = []
+    for rank in range(1, merges + 1):
+        head = _py_head(words, 1)
+        if not head:
+            break
+        a, b, cnt = head[0]
+        trajectory.append((rank, a, b, cnt))
+        words = _py_merge(words, a, b)
+    return trajectory
+
+
+def _py_batched(words, merges):
+    """bpe_train's loop: one ranking per argmax job, two merges from it
+    when the engine's _second_merge_safe allows."""
+    trajectory, created, rank = [], set(), 1
+    while rank <= merges:
+        head = _py_head(words, 3)
+        if not head:
+            break
+        batch = rank < merges and T._second_merge_safe(head, created)
+        for a, b, cnt in head[:2] if batch else head[:1]:
+            trajectory.append((rank, a, b, cnt))
+            created.add(a + b)
+            rank += 1
+            words = _py_merge(words, a, b)
+    return trajectory
+
+
+@st.composite
+def _corpora(draw):
+    """Word -> frequency over an alphabet of 1-4 letters, each word 1-3
+    runs of one letter: repeated letters make self-pairs and re-created
+    symbols common, the shapes an unsound guard gets wrong."""
+    letters = "abcd"[: draw(st.integers(1, 4))]
+    run = st.tuples(st.sampled_from(letters), st.integers(1, 4))
+    word = st.lists(run.map(lambda r: r[0] * r[1]), min_size=1, max_size=3)
+    return draw(
+        st.dictionaries(word.map("".join), st.integers(1, 6), min_size=1, max_size=6)
+    )
+
+
+@settings(max_examples=300, deadline=None, database=None)
+@given(corpus=_corpora(), merges=st.integers(1, 6))
+def test_bpe_second_merge_guard_matches_sequential_property(corpus, merges):
+    """Randomized pin of the batching decision: over small random corpora
+    with 1-6 merges, the two-merges-per-job trainer driven by the
+    engine's _second_merge_safe replays the sequential greedy trajectory
+    exactly."""
+    words = [(list(w), f) for w, f in corpus.items()]
+    assert _py_batched(words, merges) == _py_sequential(words, merges)

@@ -666,18 +666,73 @@ def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
         }
 
     # default bound (256 MB) >> any fixture table: memory route
-    monkeypatch.delenv("ESPK_MEMORY_DRAIN_MAX_BYTES", raising=False)
     via_memory = run()
     # the memory route leaves a registered sink table behind
     assert spark.catalog.tableExists("st_image_neardup_sink")
     spark.catalog.dropTempView("st_image_neardup_sink")
 
     # bound forced to 0: every source is "too big", parquet route
-    monkeypatch.setenv("ESPK_MEMORY_DRAIN_MAX_BYTES", "0")
+    monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_BYTES", 0)
     via_parquet = run()
     # the parquet route never registers the memory-sink table
     assert not spark.catalog.tableExists("st_image_neardup_sink")
     assert via_parquet == via_memory and len(via_memory) > 0
+
+
+def test_state_partitions_follow_the_fixed_policy(spark, sf_dir):
+    """Every drain query's state store gets min(STATE_PARTITIONS,
+    defaultParallelism) partitions, whatever the source size and the
+    session's own shuffle width, and the session setting is restored
+    afterwards. Pinned on st_override_asof, whose applyInPandasWithState
+    update runs serially when its state sits on one partition."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from espkinesis_spark.streaming import jobs
+
+    name = "st_override_asof_sink"
+    ids, progress, ended = set(), [], set()
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            if event.name == name:
+                ids.add(str(event.id))
+
+        def onQueryProgress(self, event):
+            progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.add(str(event.id))
+
+    want = min(jobs.STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    session_width = str(want + 1)  # differs from the policy on purpose
+    listener = _Listener()
+    spark.conf.set(key, session_width)
+    spark.streams.addListener(listener)
+    try:
+        assert jobs.override_asof_stream(spark, sf_dir).count() > 0
+        assert spark.conf.get(key) == session_width
+        # listener events arrive asynchronously, in order: once the
+        # query's termination is seen, all its progress events are too
+        deadline = time.time() + 60
+        while not (ids and ids <= ended) and time.time() < deadline:
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, prev)
+    assert ids and ids <= ended, "listener never saw the query terminate"
+    ops = [
+        op
+        for p in progress
+        if p["id"] in ids
+        for op in p["stateOperators"]
+    ]
+    assert ops, "no state operator progress recorded"
+    assert {op["numShufflePartitions"] for op in ops} == {want}
 
 
 def test_video_frame_stores_never_use_memory_sink(spark, sf_dir):
@@ -696,19 +751,19 @@ def test_video_frame_stores_never_use_memory_sink(spark, sf_dir):
 def test_source_bytes_sums_directory_style_tables(tmp_path):
     """os.path.getsize on a directory returns the inode size (~4 KB),
     which would silently pin the drain router to the memory sink for
-    any directory-style parquet table — _source_bytes must sum the
-    files underneath instead."""
-    from espkinesis_spark.streaming.jobs import _source_bytes
+    any directory-style parquet table — _source_files must expand it to
+    the files underneath, whose sizes _bytes_of sums."""
+    from espkinesis_spark.streaming.jobs import _bytes_of, _source_files
 
     f = tmp_path / "single.parquet"
     f.write_bytes(b"x" * 1000)
-    assert _source_bytes(str(f)) == 1000
+    assert _bytes_of(_source_files(str(f))) == 1000
 
     d = tmp_path / "table.parquet"
     (d / "part0").mkdir(parents=True)
     (d / "part0" / "a.parquet").write_bytes(b"x" * 600)
     (d / "b.parquet").write_bytes(b"x" * 400)
-    assert _source_bytes(str(d)) == 1000
+    assert _bytes_of(_source_files(str(d))) == 1000
 
 
 def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
@@ -726,51 +781,13 @@ def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
             for r in jobs.image_neardup_stream(spark, sf_dir).collect()
         }
 
-    monkeypatch.delenv("ESPK_MEMORY_DRAIN_MAX_BYTES", raising=False)
-    monkeypatch.delenv("ESPK_MEMORY_DRAIN_MAX_ROWS", raising=False)
     via_memory = run()
     assert spark.catalog.tableExists("st_image_neardup_sink")
     spark.catalog.dropTempView("st_image_neardup_sink")
 
-    monkeypatch.setenv("ESPK_MEMORY_DRAIN_MAX_ROWS", "0")
+    monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_ROWS", 0)
     via_parquet = run()
     assert not spark.catalog.tableExists("st_image_neardup_sink")
-    assert via_parquet == via_memory and len(via_memory) > 0
-
-
-@pytest.mark.parametrize(
-    ("job_name", "sink"),
-    [
-        ("session_window_stream", "st_session_window_sink"),
-        ("latest_per_user_stream", "st_latest_user_sink"),
-    ],
-)
-def test_complete_mode_result_sink_routes_identically(
-    spark, sf_dir, monkeypatch, job_name, sink
-):
-    """ESPK_RESULT_SINK=parquet swaps EVERY complete-mode result leg from
-    the driver memory sink to the foreachBatch parquet snapshot (the
-    100 TB shape: executor-parallel write, no driver copy) — routed from
-    the one policy point in _drain_to_memory. Both routes must return
-    the identical result multiset; the parquet route must leave no
-    memory-sink table behind. Pinned on the corpus-proportional
-    session-window leg AND a second complete-mode job to prove the
-    policy is general, not entry-special-cased."""
-    from espkinesis_spark.streaming import jobs
-
-    job = getattr(jobs, job_name)
-
-    def run():
-        return sorted(tuple(r) for r in job(spark, sf_dir).collect())
-
-    monkeypatch.delenv("ESPK_RESULT_SINK", raising=False)
-    via_memory = run()
-    assert spark.catalog.tableExists(sink)
-    spark.catalog.dropTempView(sink)
-
-    monkeypatch.setenv("ESPK_RESULT_SINK", "parquet")
-    via_parquet = run()
-    assert not spark.catalog.tableExists(sink)
     assert via_parquet == via_memory and len(via_memory) > 0
 
 
@@ -831,7 +848,7 @@ def test_drain_to_parquet_resume_requires_stable_base(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select("event_id")
     with pytest.raises(ValueError, match="caller-stable base"):
-        jobs._drain_to_parquet(ev, "resume_no_base", resume=True)
+        jobs.run_stream(ev, "resume_no_base", parquet=True, resume=True)
 
 
 def test_source_files_prunes_metadata_directories(tmp_path):
@@ -839,7 +856,7 @@ def test_source_files_prunes_metadata_directories(tmp_path):
     NAMES don't start with '_' ('0', '9.compact'), so pruning must happen
     at the directory level or the router's byte/row stats count
     ever-growing non-data manifest bytes."""
-    from espkinesis_spark.streaming.jobs import _source_bytes, _source_files
+    from espkinesis_spark.streaming.jobs import _bytes_of, _source_files
 
     d = tmp_path / "store"
     (d / "_spark_metadata").mkdir(parents=True)
@@ -853,7 +870,7 @@ def test_source_files_prunes_metadata_directories(tmp_path):
         "part-0000.parquet",
         "part-0001.parquet",
     ]
-    assert _source_bytes(str(d)) == 1000
+    assert _bytes_of(_source_files(str(d))) == 1000
 
 
 def test_source_stats_graceful_on_missing_or_garbage_paths(tmp_path, sf_dir):
@@ -861,21 +878,21 @@ def test_source_stats_graceful_on_missing_or_garbage_paths(tmp_path, sf_dir):
     stream's own reader raise the clearer error, not kill the job in the
     router's stat call (r11 ADVICE); unreadable footers likewise count 0
     instead of raising."""
-    from espkinesis_spark.streaming.jobs import _source_bytes, _source_rows
+    from espkinesis_spark.streaming.jobs import _bytes_of, _rows_of, _source_files
     from espkinesis_spark.tables import table_path
 
     missing = str(tmp_path / "nope.parquet")
-    assert _source_bytes(missing) == 0
-    assert _source_rows(missing) == 0
+    assert _bytes_of(_source_files(missing)) == 0
+    assert _rows_of(_source_files(missing)) == 0
     garbage = tmp_path / "garbage.parquet"
     garbage.write_bytes(b"not parquet at all")
-    assert _source_rows(str(garbage)) == 0
+    assert _rows_of(_source_files(str(garbage))) == 0
     # real footers: metadata-only row count equals the table's row count
     docs = table_path(sf_dir, "documents")
     import duckdb
 
     want = duckdb.sql(f"SELECT count(*) FROM '{docs}'").fetchone()[0]
-    assert _source_rows(docs) == want
+    assert _rows_of(_source_files(docs)) == want
 
 
 def test_drain_to_parquet_kill_and_resume_is_exactly_once(
@@ -883,7 +900,7 @@ def test_drain_to_parquet_kill_and_resume_is_exactly_once(
 ):
     """VERDICT r11 #3: at 100 TB a driver restart must not re-extract the
     corpus. Kill a multi-batch parquet drain mid-replay, resume it with
-    jobs._drain_to_parquet(resume=True) on the same stable base, and pin
+    jobs.run_stream(parquet=True, resume=True) on the same stable base, and pin
     EXACTLY-ONCE store contents: the exact row count proves
     no-duplication (the resumed run skipped every committed batch), the
     set compare proves no-loss (the interrupted batch was replayed)."""
@@ -931,8 +948,8 @@ def test_drain_to_parquet_kill_and_resume_is_exactly_once(
             break
     assert len(q.recentProgress) < n_chunks, "kill never landed mid-replay"
 
-    drained = jobs._drain_to_parquet(
-        source(), "resume_drain_victim", base=base, resume=True
+    drained = jobs.run_stream(
+        source(), "resume_drain_victim", parquet=True, base=base, resume=True
     )
     assert drained.count() == ev.count()  # no duplication
     assert {tuple(r) for r in drained.collect()} == {
@@ -969,8 +986,8 @@ def test_drain_resume_refuses_changed_extraction_schema(
         )
 
     # first run commits the v1 projection
-    v1 = jobs._drain_to_parquet(
-        source(["event_id", "user_id"]), "schema_evo", base=base, resume=True
+    v1 = jobs.run_stream(
+        source(["event_id", "user_id"]), "schema_evo", parquet=True, base=base, resume=True
     )
     assert v1.count() == ev.count()
 
@@ -979,17 +996,17 @@ def test_drain_resume_refuses_changed_extraction_schema(
         "shard", F.pmod("user_id", F.lit(8)).cast("long")
     )
     with pytest.raises(ValueError, match="schema changed.*shard"):
-        jobs._drain_to_parquet(evolved, "schema_evo", base=base, resume=True)
+        jobs.run_stream(evolved, "schema_evo", parquet=True, base=base, resume=True)
     # ... and a retyped column is refused too, not just an added one
     retyped = source(["event_id", "user_id"]).withColumn(
         "user_id", F.col("user_id").cast("int")
     )
     with pytest.raises(ValueError, match="schema changed"):
-        jobs._drain_to_parquet(retyped, "schema_evo", base=base, resume=True)
+        jobs.run_stream(retyped, "schema_evo", parquet=True, base=base, resume=True)
 
     # unchanged schema still resumes fine (exactly-once: count is stable)
-    v1_again = jobs._drain_to_parquet(
-        source(["event_id", "user_id"]), "schema_evo", base=base, resume=True
+    v1_again = jobs.run_stream(
+        source(["event_id", "user_id"]), "schema_evo", parquet=True, base=base, resume=True
     )
     assert v1_again.count() == ev.count()
 
@@ -1022,16 +1039,16 @@ def test_drain_resume_reordered_projection_reads_back_by_name(
             .select(*cols)
         )
 
-    v1 = jobs._drain_to_parquet(
-        source(["event_id", "user_id"]), "schema_reorder", base=base, resume=True
+    v1 = jobs.run_stream(
+        source(["event_id", "user_id"]), "schema_reorder", parquet=True, base=base, resume=True
     )
     assert v1.count() == first.count()
 
     # new arrivals land physically reordered, and the restarted job's
     # projection is reordered too — the guard must accept, not refuse
     second.select("user_id", "event_id").write.mode("append").parquet(str(src_dir))
-    drained = jobs._drain_to_parquet(
-        source(["user_id", "event_id"]), "schema_reorder", base=base, resume=True
+    drained = jobs.run_stream(
+        source(["user_id", "event_id"]), "schema_reorder", parquet=True, base=base, resume=True
     )
     got = {(r["event_id"], r["user_id"]) for r in drained.collect()}
     want = {(r["event_id"], r["user_id"]) for r in ev.collect()}

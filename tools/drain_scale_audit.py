@@ -12,8 +12,9 @@ sf0.1 — the only step where BOTH the documents table (500 -> 5000) and
 the events table (10k -> 100k) actually grow 10x; sf0.001 -> sf0.01
 leaves documents flat at 500, which would blind the doc-side leg).
 For each entry, capture the streaming query names it executed
-(jobs.LAST_STREAM_PLANS, cleared per entry) and, for every name that
-left a memory-sink table in the session catalog, record the table's
+(jobs.LAST_STREAM_PLANS, cleared per entry; every drain records there
+through jobs.run_stream) and, for every name that left a memory-sink
+table in the session catalog, record the table's
 row count at each SF plus the entry's RESULT row count. Classification
 of a store whose rows grow more than GROWTH_LIMIT across the step:
 
@@ -22,12 +23,14 @@ of a store whose rows grow more than GROWTH_LIMIT across the step:
     harness collects anyway, so the memory sink adds no second
     corpus-sized driver copy (the r10 VERDICT st_stratified carve-out).
   * EXPECTED_GROWTH (annotated): policy-routed fingerprint stores
-    (jobs._drain_rowstore keeps them on the memory sink BELOW its
-    source-size bound and crosses to the parquet drain above it) and
+    (jobs._drain_rowstore keeps them on the memory sink BELOW
+    jobs.MEMORY_DRAIN_MAX_SOURCE_ROWS / _BYTES and calls
+    run_stream(..., parquet=True) above them) and
     stores whose growth tracks a dimension the fixture couples to SF
     (key cardinality, time span) rather than corpus row count.
-  * anything else: FLAGGED — cross it to jobs._drain_to_parquet or
-    route it through jobs._drain_rowstore.
+  * anything else: FLAGGED — drain it with
+    jobs.run_stream(..., parquet=True) or route it through
+    jobs._drain_rowstore.
 
 Exit 1 on unexplained flags, 0 when clean.
 
@@ -54,8 +57,9 @@ MIN_FLAG_ROWS = 1000
 # sink name -> why >GROWTH_LIMIT growth is correct for this store
 EXPECTED_GROWTH: dict[str, str] = {
     "st_image_neardup_sink": "policy-routed per-doc fingerprint store: "
-    "_drain_rowstore keeps it on the memory sink below the 256 MB "
-    "source bound and crosses to the parquet drain above it (route "
+    "_drain_rowstore keeps it on the memory sink below the "
+    "MEMORY_DRAIN_MAX_SOURCE_ROWS / _BYTES bounds and drains it with "
+    "run_stream(parquet=True) above them (route "
     "pinned by tests/test_streaming.py::test_drain_rowstore_routes_by_source_size)",
     "st_image_dedup_apply_sink": "policy-routed per-doc fingerprint "
     "store (same _drain_rowstore bound)",
@@ -124,7 +128,7 @@ def main() -> None:
     if flagged:
         print(f"\nFLAGGED ({len(flagged)}): corpus-proportional driver "
               "memory-sink stores — cross these to the parquet drain "
-              "(jobs._drain_to_parquet / _drain_rowstore):")
+              "(jobs.run_stream(..., parquet=True) / _drain_rowstore):")
         for entry, sink, a, b, r in flagged:
             print(f"  {entry}: {sink} {a} -> {b} (x{r:.1f})")
         sys.exit(1)

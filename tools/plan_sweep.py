@@ -21,7 +21,8 @@ costs one small Spark job. Expected; not a red flag. Streaming entries (``st_*``
 can't be — a streaming frame's physical plan only materializes once a
 query runs — so the streaming leg RUNS each entry (availableNow replay,
 the entry's own execution path) and greps the executed micro-batch plans
-recorded at the drain sites (``jobs.LAST_STREAM_PLANS``) plus the
+recorded by ``jobs.run_stream`` and the round-trip jobs
+(``jobs.LAST_STREAM_PLANS``) plus the
 returned batch frame's plan.
 
 Usage: python tools/plan_sweep.py [SF_DIR]   (default sf0.001)
