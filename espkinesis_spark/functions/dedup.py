@@ -475,51 +475,19 @@ def neardup_jaccard_exact(
     )
 
 
-def simhash(docs: DataFrame, bits: int = C.SIMHASH_BITS, impl: str = "numpy") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = C.SIMHASH_BITS) -> DataFrame:
     """SimHash over whitespace tokens (with multiplicity), md5-derived bits.
 
     bit_j(token) = bit (3 - j%4) of nibble j//4 of md5(token); the signature
-    sets bit j iff sum over tokens of (2*bit_j - 1) > 0. Packed into a
-    BIGINT as sum(2^j). Arithmetic (floor/power/mod) instead of bit ops so
-    the DuckDB oracle is expression-identical.
+    sets bit j iff sum over tokens of (2*bit_j - 1) > 0, packed into a
+    BIGINT as sum(2^j) — the DuckDB oracle spells this out with
+    floor/power/mod arithmetic. The bit order is exactly the MSB-first bit
+    order of the digest bytes, so ``np.unpackbits`` over the first
+    ceil(bits/8) digest bytes reproduces it directly.
 
-    ``impl='numpy'`` (default) computes the whole signature inside one
-    Arrow batch per task — a pure map with zero shuffle and no row
-    explosion, the shape that survives 100 TB. ``impl='sql'`` keeps the
-    expression-tree form (token x bit explode + two aggregations) that is
-    textually parallel to the DuckDB oracle.
-    """
-    if impl == "numpy":
-        return _simhash_numpy(docs, bits)
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
-    tok = tok.withColumn("h", F.md5(F.col("tok")))
-    per_bit = (
-        tok.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j"),
-            F.col("h"),
-        )
-        .withColumn(
-            "nib",
-            F.expr("instr('0123456789abcdef', substring(h, CAST(floor(j / 4) AS INT) + 1, 1)) - 1"),
-        )
-        .withColumn("bit", F.expr("CAST(floor(nib / power(2, 3 - (j % 4))) AS BIGINT) % 2"))
-        .groupBy("doc_id", "j")
-        .agg(F.sum(F.col("bit") * 2 - 1).alias("s"))
-    )
-    return per_bit.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("s") > 0, F.expr("CAST(power(2, j) AS BIGINT)")).otherwise(F.lit(0).cast("long"))
-        ).alias("simhash")
-    )
-
-
-def _simhash_numpy(docs: DataFrame, bits: int) -> DataFrame:
-    """Arrow-batched SimHash kernel, bit-identical to the SQL form.
-
-    bit_j(token) = bit (3 - j%4) of nibble j//4 of md5(token) — exactly the
-    MSB-first bit order of the digest bytes, so ``np.unpackbits`` over the
-    first ceil(bits/8) digest bytes reproduces it directly.
+    The whole signature is computed inside one Arrow batch per task — a
+    pure map with zero shuffle and no row explosion, the shape that
+    survives 100 TB.
     """
     import hashlib
     import re
@@ -570,7 +538,6 @@ def _ckpt(df: DataFrame, mode: str) -> DataFrame:
 def dedup_clusters(
     pairs: DataFrame,
     max_iters: int = 25,
-    impl: str = "star",
     checkpoint: str = "local",
 ) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) with
@@ -580,65 +547,53 @@ def dedup_clusters(
     decision needs CLUSTERS (A~B, B~C must drop two docs, not settle two
     independent pairs).
 
-    ``impl='star'`` (default): the large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds even on chain graphs, needs no per-round
-    driver action (the round budget is derived from one upfront node
-    count), and verifies convergence with a single fixpoint check at the
-    end. ``impl='minlabel'``: plain min-label propagation — one shuffle
-    per round, converges in graph-diameter rounds; fine when near-dup
-    clusters are shallow, raises if the diameter exceeds ``max_iters``.
-
-    Both implementations raise RuntimeError instead of returning
-    silently-wrong split clusters when the iteration budget is exhausted
-    before convergence. ``checkpoint='reliable'`` swaps the per-round
-    ``localCheckpoint`` for reliable checkpointing (requires
+    The large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond") converges in O(log n) rounds even
+    on chain graphs. A fully-contracted component is a star on its
+    minimum, and stars are fixpoints of small∘large — so each round checks
+    whether the edge set changed and stops at the first fixpoint. The
+    check is one action over the EDGE set, which is near-dup-pair-sized —
+    orders of magnitude smaller than the corpus at any scale — and real dup
+    graphs converge in 2-4 rounds. ``max_iters`` bounds the adversarial
+    case; exhausting it without a fixpoint raises RuntimeError instead of
+    returning split clusters. ``checkpoint='reliable'`` swaps the
+    per-round ``localCheckpoint`` for reliable checkpointing (requires
     ``sparkContext.setCheckpointDir``) so a lost executor cannot kill a
     long run.
     """
-    if impl == "star":
-        return _dedup_clusters_star(pairs, max_iters, checkpoint)
     edges = _ckpt(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-        ),
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct(),
         checkpoint,
     )
-    labels = _ckpt(
-        edges.select(F.col("u").alias("node")).distinct().withColumn("label", F.col("node")),
-        checkpoint,
-    )
-    changed = 0
+    # Fixpoint check, count-gated (r16): both edge sets are DISTINCT
+    # (small_star ends in distinct), so set equality ⟺ |nxt| == |edges|
+    # AND nxt \ edges = ∅ (equal-cardinality subset ⇒ equality). The
+    # count over a just-checkpointed frame is a near-free local-block
+    # scan, so non-converged rounds skip the two anti-joins the old
+    # symmetric-difference check paid every round; the one-direction
+    # except runs only when the counts agree (typically once, at the
+    # actual fixpoint).
+    n_edges = edges.count()
+    converged = False
     for _ in range(max_iters):
-        nbr = (
-            edges.join(labels, edges["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nl"))
-        )
-        # carry the changed flag through the same projection: the
-        # convergence check is then a filter-count on the checkpointed
-        # result, not a second join + recompute per round
-        new = _ckpt(
-            labels.join(nbr, labels["node"] == nbr["u"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nl"), F.col("label"))).alias("nl2"),
-                (F.coalesce(F.col("nl"), F.col("label")) < F.col("label")).alias("__chg"),
-            )
-            .withColumnRenamed("nl2", "label"),
-            checkpoint,
-        )
-        changed = new.filter(F.col("__chg")).count()
-        labels = new.drop("__chg")
-        if changed == 0:
+        nxt = _ckpt(_small_star(_large_star(edges)), checkpoint)
+        n_nxt = nxt.count()
+        if n_nxt == n_edges and nxt.exceptAll(edges).isEmpty():
+            edges = nxt
+            converged = True
             break
-    if changed:
+        edges, n_edges = nxt, n_nxt
+    if not converged:
         raise RuntimeError(
-            f"dedup_clusters(minlabel) did not converge in {max_iters} rounds "
-            f"({changed} labels still changing) — the component diameter exceeds "
-            "the budget; use impl='star' or raise max_iters"
+            f"dedup_clusters not a fixpoint after {max_iters} rounds — "
+            "raise max_iters (expected O(log n) convergence)"
         )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    return sym.groupBy("u").agg(
+        F.least(F.min("v"), F.first("u")).alias("cluster_id")
+    ).select(F.col("u").alias("doc_id"), "cluster_id")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -687,77 +642,17 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr.union(own).distinct()
 
 
-def _dedup_clusters_star(pairs: DataFrame, max_iters: int, checkpoint: str) -> DataFrame:
-    """Large-star/small-star alternation with per-round fixpoint exit.
-
-    A fully-contracted component is a star on its minimum, and stars are
-    fixpoints of small∘large — so each round checks whether the edge set
-    changed (symmetric difference isEmpty) and stops at the first fixpoint.
-    The check is one action over the EDGE set, which is near-dup-pair-sized
-    — orders of magnitude smaller than the corpus at any scale — and
-    real dup graphs converge in 2-4 rounds, far under the worst-case
-    O(log n) the alternation guarantees on adversarial chains. max_iters
-    bounds the adversarial case; exhausting it without a fixpoint raises
-    instead of returning split clusters."""
-    edges = _ckpt(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        checkpoint,
-    )
-    # Fixpoint check, count-gated (r16): both edge sets are DISTINCT
-    # (small_star ends in distinct), so set equality ⟺ |nxt| == |edges|
-    # AND nxt \ edges = ∅ (equal-cardinality subset ⇒ equality). The
-    # count over a just-checkpointed frame is a near-free local-block
-    # scan, so non-converged rounds skip the two anti-joins the old
-    # symmetric-difference check paid every round; the one-direction
-    # except runs only when the counts agree (typically once, at the
-    # actual fixpoint).
-    n_edges = edges.count()
-    converged = False
-    for _ in range(max_iters):
-        nxt = _ckpt(_small_star(_large_star(edges)), checkpoint)
-        n_nxt = nxt.count()
-        if n_nxt == n_edges and nxt.exceptAll(edges).isEmpty():
-            edges = nxt
-            converged = True
-            break
-        edges, n_edges = nxt, n_nxt
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters(star) not a fixpoint after {max_iters} rounds — "
-            "raise max_iters (expected O(log n) convergence)"
-        )
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("cluster_id")
-    ).select(F.col("u").alias("doc_id"), "cluster_id")
-
-
 # Corpus-scan size below which dedup_apply's drop set is safely broadcast-
 # sized (drop set ≤ corpus keys; a ≤256 MB corpus cannot yield a drop set
 # that troubles a 10 MB-order broadcast of bare int64 keys).
 DEDUP_APPLY_BROADCAST_BYTES = 256 << 20
 
 
-def dedup_apply(
-    docs: DataFrame, threshold: float = C.JACCARD_THRESHOLD, impl: str = "auto"
-) -> DataFrame:
+def dedup_apply(docs: DataFrame, threshold: float = C.JACCARD_THRESHOLD) -> DataFrame:
     """Full near-dup dedup pass applied to the corpus: LSH near-dup pairs →
     connected components → keep the min-doc_id canonical per cluster, drop
     every other member. Returns the surviving documents (original schema).
-
-    ``impl='broadcast'``: map-side probe — the drop set broadcasts into a
-    left-anti join and the corpus scan is never shuffled. Right shape only
-    while the drop set is executor-memory-sized.
-    ``impl='shuffle'``: plain shuffled left-anti — the 100 TB shape. At
-    web-scale dup rates (30-50%) the drop set is corpus-scale; forcing a
-    broadcast there OOMs every executor, while the shuffle costs one
-    exchange of bare (doc_id) keys.
-    ``impl='auto'`` (default): route on Catalyst's size estimate of the
-    corpus scan (a reliable parquet stat, unlike the multi-stage drop-set
-    plan whose estimate degrades to a sentinel): small corpus → broadcast,
-    else shuffle. Mirrors assign_ids' plan-size routing.
+    The drop set is removed by ``apply_drop_set``.
     """
     pairs = neardup_minhash(docs, threshold)
     drops = (
@@ -765,29 +660,28 @@ def dedup_apply(
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id")
     )
-    return apply_drop_set(docs, drops, impl)
+    return apply_drop_set(docs, drops)
 
 
-def apply_drop_set(
-    docs: DataFrame, drops: DataFrame, impl: str = "auto", key: str = "doc_id"
-) -> DataFrame:
-    """The dedup_apply anti-join stage alone: remove ``drops`` (bare
-    ``key`` ids) from ``docs``, routing broadcast-vs-shuffle on the
-    corpus scan's Catalyst size estimate exactly as ``dedup_apply``
-    documents. Shared by every pairs-source (MinHash text, perceptual
-    Hamming, substring, SemDeDup embeddings via ``key='vec_id'``) so
-    each modality's dedup ends in the same never-shuffle-the-corpus
-    apply shape."""
-    if impl == "auto":
-        from espkinesis_spark.plans.audit import plan_size_bytes
+def apply_drop_set(docs: DataFrame, drops: DataFrame, key: str = "doc_id") -> DataFrame:
+    """Remove ``drops`` (bare ``key`` ids) from ``docs``. Shared by every
+    pairs-source (MinHash text, perceptual Hamming, substring, SemDeDup
+    embeddings via ``key='vec_id'``) so each modality's dedup ends in the
+    same never-shuffle-the-corpus apply shape.
 
-        size = plan_size_bytes(docs)
-        impl = (
-            "broadcast"
-            if size is not None and size <= DEDUP_APPLY_BROADCAST_BYTES
-            else "shuffle"
-        )
-    if impl == "broadcast":
+    Routes on Catalyst's size estimate of the corpus scan (a reliable
+    parquet stat, unlike the multi-stage drop-set plan whose estimate
+    degrades to a sentinel), mirroring assign_ids' plan-size routing:
+    within ``DEDUP_APPLY_BROADCAST_BYTES`` the drop set broadcasts into a
+    map-side left-anti join and the corpus scan is never shuffled; above
+    it a plain shuffled left-anti — the 100 TB shape. At web-scale dup
+    rates (30-50%) the drop set is corpus-scale; forcing a broadcast there
+    OOMs every executor, while the shuffle costs one exchange of bare
+    ``key`` ids."""
+    from espkinesis_spark.plans.audit import plan_size_bytes
+
+    size = plan_size_bytes(docs)
+    if size is not None and size <= DEDUP_APPLY_BROADCAST_BYTES:
         return docs.join(F.broadcast(drops), key, "left_anti")
     # hint AGAINST broadcast so AQE keeps the exchange even if the drop
     # set's runtime stats look small mid-query

@@ -74,7 +74,7 @@ def register_python_functions(spark: SparkSession) -> list[str]:
     from pyspark.sql.functions import pandas_udf
 
     def _simhash_kernel(text):
-        # same kernel contract as functions.dedup._simhash_numpy
+        # same kernel contract as functions.dedup.simhash
         import hashlib
         import re
 

@@ -3,8 +3,9 @@
 Three paths, same semantics (cosine rounded to 6 dp before any argmax /
 threshold; ties break to the lowest neighbor id):
 
-* brute-force top-k — the correctness baseline. Query-set x corpus join;
-  fine when the query set is bounded or the corpus side is broadcastable.
+* brute-force top-k — the correctness baseline. The query set is
+  broadcast and scored against every corpus batch; fine while the query
+  set is bounded.
 * threshold near-dup — all pairs above a cosine threshold; brute force at
   test scale, blocked at real scale.
 * IVF — deterministic coarse quantization: assign every vector to its
@@ -13,9 +14,12 @@ threshold; ties break to the lowest neighbor id):
   assignment pass is a broadcast join against the (small) centroid set,
   and the probe is an equi-join on centroid id — no all-pairs anywhere.
 
-Dot products run JVM-side via zip_with/aggregate in whole-stage codegen.
-For very wide vectors (>~1k dims) a pandas_udf over Arrow batches with
-numpy matmul wins — keep the same API and swap the kernel.
+The corpus-wide scans (brute-force top-k, broadcast near-dup, the blocked
+near-dup scorer, IVF assignment) are Arrow-batched numpy matmuls built
+from one build-side collect (``_build_side``) and one rounded-cosine
+expression (``_cos_matrix``). The candidate joins that score few pairs per
+vector (LSH, the IVF probe, SemDeDup) keep the JVM-side
+zip_with/aggregate ``cosine`` in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -102,27 +106,37 @@ def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
 # (PQ subvectors w=4; the W=16 ts-similarity distance).
 
 
-def _pairs(queries: DataFrame, corpus: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """(query x corpus) pairs with rounded cosine, self-pairs excluded.
+def _rows(pdf, vec_col: str = "embedding"):
+    """(ids, mat, norms) of one pandas frame of (vec_id, vector) rows: the
+    float64 matrix every matmul kernel scores. Zero rows give a (0, 0)
+    matrix (numpy cannot stack nothing), so callers test ``len(ids)``."""
+    import numpy as np
 
-    The corpus side is hinted broadcast when Spark's size estimate allows;
-    for corpora beyond broadcast size, pre-filter with IVF (below) instead.
-    """
-    q = with_norm(queries, vec_col).select(
-        F.col("vec_id").alias("vec_id"),
-        F.col(vec_col).alias("__qv"),
-        F.col("__norm").alias("__qn"),
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    mat = (
+        np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        if len(ids)
+        else np.empty((0, 0))
     )
-    c = with_norm(corpus, vec_col).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.col("__norm").alias("__cn"),
-    )
-    return (
-        q.join(c, q.vec_id != c.neighbor_id)
-        .withColumn("cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")))
-        .select("vec_id", "neighbor_id", "cos")
-    )
+    return ids, mat, np.sqrt((mat * mat).sum(axis=1))
+
+
+def _build_side(df: DataFrame, vec_col: str = "embedding"):
+    """The broadcast side of a matmul kernel as ``_rows``, sorted by id so
+    an argmax over its columns lands on the lowest id at ties. Arrow
+    toPandas, not collect(): the row-pickle path cost 0.61 s for the
+    2000x64 sf0.1 build side vs 0.21 s through Arrow (r17, guide §6
+    Arrow-for-driver-transfers); float64 bits are identical."""
+    pdf = df.select("vec_id", vec_col).toPandas()
+    return _rows(pdf.sort_values("vec_id", kind="stable"), vec_col)
+
+
+def _cos_matrix(a, an, b, bn):
+    """Rounded cosine of every (row of a, row of b) pair — the one numpy
+    form of ``cosine``."""
+    import numpy as np
+
+    return np.round((a @ b.T) / (an[:, None] * bn[None, :]), C.COSINE_ROUND)
 
 
 def topk_bruteforce(
@@ -130,51 +144,41 @@ def topk_bruteforce(
     corpus: DataFrame,
     k: int = C.ANN_TOPK,
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Exact top-k neighbors per query vector: (vec_id, rnk, neighbor_id, cos).
 
-    ``impl='numpy'`` (default): broadcast the (small) query matrix, BLAS
-    matmul against each Arrow batch of the corpus, keep a local top-k per
-    query per batch, then one tiny window merge over batches*k candidates —
-    the scan over the corpus is a pure map, so the shape holds at any corpus
-    size. ``impl='sql'`` keeps the pure-Catalyst pairwise join.
+    Broadcast the (small) query matrix, BLAS matmul against each Arrow
+    batch of the corpus, keep a local top-k per query per batch, then one
+    tiny window merge over batches*k candidates — the scan over the corpus
+    is a pure map, so the shape holds at any corpus size.
     """
+    schema = "vec_id long, rnk long, neighbor_id long, cos double"
+    build = _build_side(queries, vec_col)
+    if not len(build[0]):
+        return queries.sparkSession.createDataFrame([], schema)
     w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    pairs = (
-        _topk_candidates_numpy(queries, corpus, k, vec_col)
-        if impl == "numpy"
-        else _pairs(queries, corpus, vec_col)
-    )
     return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
+        _topk_candidates(corpus, build, k, vec_col)
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
         .select("vec_id", "rnk", "neighbor_id", "cos")
     )
 
 
-def _topk_candidates_numpy(
-    queries: DataFrame, corpus: DataFrame, k: int, vec_col: str
-) -> DataFrame:
+def _topk_candidates(corpus: DataFrame, build, k: int, vec_col: str) -> DataFrame:
     """Per-batch local top-k candidates (vec_id, neighbor_id, cos): the
     global merge only sees batches*k rows per query. Ties keep the lowest
-    neighbor_id, matching the SQL path."""
+    neighbor_id, matching the oracle's window order."""
     import numpy as np
     import pandas as pd
 
-    rows = queries.select("vec_id", vec_col).collect()  # broadcast build side
-    q_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    q_mat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    q_norms = np.sqrt((q_mat * q_mat).sum(axis=1))
-    bc = queries.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norms))
+    bc = corpus.sparkSession.sparkContext.broadcast(build)
 
     def run(batches):
         qi, qm, qn = bc.value
         for pdf in batches:
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            c_norms = np.sqrt((c_mat * c_mat).sum(axis=1))
-            cos = np.round((c_mat @ qm.T) / (c_norms[:, None] * qn[None, :]), C.COSINE_ROUND)
+            c_ids, c_mat, c_norms = _rows(pdf, vec_col)
+            cos = _cos_matrix(c_mat, c_norms, qm, qn)
             out_q, out_n, out_c = [], [], []
             for j in range(len(qi)):
                 col = np.where(c_ids != qi[j], cos[:, j], -np.inf)
@@ -218,88 +222,55 @@ NEARDUP_BROADCAST_BYTES = 64 << 20
 NEARDUP_MAX_BLOCKS = 64
 
 
-def neardup_cosine(
-    vecs: DataFrame, threshold: float = C.NEARDUP_COSINE, impl: str = "auto"
-) -> DataFrame:
+def neardup_cosine(vecs: DataFrame, threshold: float = C.NEARDUP_COSINE) -> DataFrame:
     """All pairs (a < b) with rounded cosine >= threshold.
 
-    ``impl='auto'`` (default): pick the single-broadcast matmul kernel when
-    Catalyst's size estimate fits ``NEARDUP_BROADCAST_BYTES``, otherwise the
-    blocked path (corpus scored block-pair by block-pair, entirely on
-    executors — no corpus data ever reaches the driver) — same output
-    either way (equivalence-tested). A 100 TB embedding table can never be
-    collected to the driver, so auto-routing on the plan estimate is what
-    makes this the default-safe entry point.
-    ``impl='numpy'``: force the broadcast kernel — each Arrow batch computes
-    a (batch x corpus) BLAS matmul, ~50x the expression-tree dot product.
-    ``impl='sql'`` keeps the pure-Catalyst pairwise join (oracle's shape).
+    Routes on Catalyst's size estimate: a corpus that fits
+    ``NEARDUP_BROADCAST_BYTES`` is collected once and broadcast, and each
+    Arrow batch computes a (batch x corpus) BLAS matmul against it;
+    anything larger takes the blocked path (corpus scored block-pair by
+    block-pair, entirely on executors — no corpus data ever reaches the
+    driver). Same output either way (equivalence-tested). A 100 TB
+    embedding table can never be collected to the driver, so routing on
+    the plan estimate is what makes this the default-safe entry point.
     """
-    if impl == "auto":
-        size = _plan_size_bytes(vecs)
-        if size is not None and size <= NEARDUP_BROADCAST_BYTES:
-            return _neardup_cosine_numpy(vecs, threshold)
-        import math
+    size = _plan_size_bytes(vecs)
+    if size is not None and size <= NEARDUP_BROADCAST_BYTES:
+        return _neardup_cosine_broadcast(vecs, threshold)
+    import math
 
-        n_blocks = (
-            min(NEARDUP_MAX_BLOCKS, max(2, math.ceil(size / NEARDUP_BROADCAST_BYTES)))
-            if size is not None
-            else 8
-        )
-        return neardup_cosine_blocked(vecs, threshold, n_blocks)
-    if impl == "numpy":
-        return _neardup_cosine_numpy(vecs, threshold)
-    a = with_norm(vecs).select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("__av"), F.col("__norm").alias("__an")
+    n_blocks = (
+        min(NEARDUP_MAX_BLOCKS, max(2, math.ceil(size / NEARDUP_BROADCAST_BYTES)))
+        if size is not None
+        else 8
     )
-    b = with_norm(vecs).select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("__bv"), F.col("__norm").alias("__bn")
-    )
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", cosine(F.col("__av"), F.col("__bv"), F.col("__an"), F.col("__bn")))
-        .filter(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", "cos")
-    )
+    return neardup_cosine_blocked(vecs, threshold, n_blocks)
 
 
-def _neardup_cosine_numpy(probe: DataFrame, threshold: float) -> DataFrame:
-    """Arrow-batched matmul kernel behind the same (vec_a, vec_b, cos)
-    contract. The corpus is collected and broadcast (the auto-router only
-    sends broadcast-sized corpora here); every probe batch matmuls against
-    it, emitting pairs with probe_id < build_id."""
+def _neardup_cosine_broadcast(probe: DataFrame, threshold: float) -> DataFrame:
+    """The broadcast route of ``neardup_cosine``: every probe batch
+    matmuls against the collected corpus, emitting pairs with
+    probe_id < build_id."""
     import numpy as np
     import pandas as pd
 
-    # Arrow toPandas, not collect(): the row-pickle path cost 0.61 s for
-    # the 2000x64 sf0.1 build side vs 0.21 s through Arrow (r17, guide
-    # §6 Arrow-for-driver-transfers); float64 bits are identical.
-    pdf = probe.select("vec_id", "embedding").toPandas()
-    if pdf.empty:
-        return probe.sparkSession.createDataFrame(
-            [], "vec_a long, vec_b long, cos double"
-        )
-    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    bc = probe.sparkSession.sparkContext.broadcast((ids, mat, norms))
+    schema = "vec_a long, vec_b long, cos double"
+    build = _build_side(probe)
+    if not len(build[0]):
+        return probe.sparkSession.createDataFrame([], schema)
+    bc = probe.sparkSession.sparkContext.broadcast(build)
 
     def run(batches):
         b_ids, b_mat, b_norms = bc.value
         for pdf in batches:
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-            cos = np.round(
-                (a_mat @ b_mat.T) / (a_norms[:, None] * b_norms[None, :]), C.COSINE_ROUND
-            )
+            a_ids, a_mat, a_norms = _rows(pdf)
+            cos = _cos_matrix(a_mat, a_norms, b_mat, b_norms)
             ai, bi = np.nonzero((cos >= threshold) & (a_ids[:, None] < b_ids[None, :]))
             yield pd.DataFrame(
                 {"vec_a": a_ids[ai], "vec_b": b_ids[bi], "cos": cos[ai, bi]}
             )
 
-    return probe.select("vec_id", "embedding").mapInPandas(
-        run, schema="vec_a long, vec_b long, cos double"
-    )
+    return probe.select("vec_id", "embedding").mapInPandas(run, schema=schema)
 
 
 def neardup_cosine_blocked(
@@ -354,13 +325,9 @@ def neardup_cosine_blocked(
         )
         if a.empty or b.empty:
             return empty
-        a_ids = a["vec_id"].to_numpy(dtype=np.int64)
-        b_ids = b["vec_id"].to_numpy(dtype=np.int64)
-        a_mat = np.stack(a["embedding"].to_numpy()).astype(np.float64)
-        b_mat = a_mat if i == j else np.stack(b["embedding"].to_numpy()).astype(np.float64)
-        a_n = np.sqrt((a_mat * a_mat).sum(axis=1))
-        b_n = a_n if i == j else np.sqrt((b_mat * b_mat).sum(axis=1))
-        cos = np.round((a_mat @ b_mat.T) / (a_n[:, None] * b_n[None, :]), C.COSINE_ROUND)
+        a_ids, a_mat, a_n = _rows(a)
+        b_ids, b_mat, b_n = (a_ids, a_mat, a_n) if i == j else _rows(b)
+        cos = _cos_matrix(a_mat, a_n, b_mat, b_n)
         hit = cos >= threshold
         if i == j:
             hit &= a_ids[:, None] < b_ids[None, :]
@@ -528,19 +495,53 @@ def knn_graph(
     )
 
 
-def ivf_assign(vecs: DataFrame, centroids: DataFrame, impl: str = "numpy") -> DataFrame:
+def ivf_assign(
+    vecs: DataFrame, centroids: DataFrame, keep_vec: bool = False
+) -> DataFrame:
     """Assign every vector to its nearest centroid (rounded cosine,
-    tie → lowest centroid id).
-
-    ``impl='numpy'`` (default): broadcast the centroid matrix, one matmul +
+    tie → lowest centroid id): broadcast the centroid matrix, one matmul +
     argmax per Arrow batch — the assignment is a pure map over the corpus,
-    which is what makes IVF the scale path in the first place.
-    ``impl='sql'``: broadcast cross join + window (the oracle's shape).
-    """
-    if impl == "numpy":
-        return _ivf_assign_numpy(vecs, centroids)
-    pairs = (
-        with_norm(vecs)
+    which is what makes IVF the scale path in the first place. Centroid
+    ids are sorted ascending, so a plain argmax lands on the lowest id at
+    ties.
+
+    ``keep_vec=True`` passes the embedding column through the kernel
+    unchanged (r16): kmeans_train's update step previously JOINED the
+    assignment back to the corpus to re-fetch the vector — a full
+    corpus-by-corpus equi-join per Lloyd round — when the Arrow batch
+    already held it; the pass-through trades a few extra Arrow bytes for
+    removing that shuffle join entirely (guide §2.4)."""
+    import numpy as np
+    import pandas as pd
+
+    schema = "vec_id long, centroid_id long"
+    if keep_vec:
+        vec_field = next(f for f in vecs.schema.fields if f.name == "embedding")
+        schema += f", embedding {vec_field.dataType.simpleString()}"
+    build = _build_side(centroids)
+    if not len(build[0]):
+        return vecs.sparkSession.createDataFrame([], schema)
+    bc = vecs.sparkSession.sparkContext.broadcast(build)
+
+    def run(batches):
+        ci, cm, cn = bc.value
+        for pdf in batches:
+            v_ids, v_mat, v_norms = _rows(pdf)
+            cos = _cos_matrix(v_mat, v_norms, cm, cn)
+            out = {"vec_id": v_ids, "centroid_id": ci[np.argmax(cos, axis=1)]}
+            if keep_vec:
+                out["embedding"] = pdf["embedding"]
+            yield pd.DataFrame(out)
+
+    return vecs.select("vec_id", "embedding").mapInPandas(run, schema=schema)
+
+
+def _nearest_centroids(queries: DataFrame, centroids: DataFrame, n: int) -> DataFrame:
+    """(vec_id, centroid_id) for the ``n`` nearest centroids of each query
+    (rounded cosine, ties to the lowest centroid id): a broadcast cross
+    join of the query set against the centroid set, then a window."""
+    qc = (
+        with_norm(queries)
         .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
         .crossJoin(
             F.broadcast(
@@ -553,53 +554,12 @@ def ivf_assign(vecs: DataFrame, centroids: DataFrame, impl: str = "numpy") -> Da
         )
         .withColumn("cos", cosine(F.col("__v"), F.col("__c"), F.col("__vn"), F.col("__cn")))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("centroid_id").asc())
+    wq = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("centroid_id").asc())
     return (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        qc.withColumn("__rn", F.row_number().over(wq))
+        .filter(F.col("__rn") <= n)
         .select("vec_id", "centroid_id")
     )
-
-
-def _ivf_assign_numpy(
-    vecs: DataFrame, centroids: DataFrame, keep_vec: bool = False
-) -> DataFrame:
-    """Matmul assignment kernel. Centroid ids are sorted ascending so a
-    plain argmax over rounded cosines lands on the lowest id at ties,
-    matching the SQL path.
-
-    ``keep_vec=True`` passes the embedding column through the kernel
-    unchanged (r16): kmeans_train's update step previously JOINED the
-    assignment back to the corpus to re-fetch the vector — a full
-    corpus-by-corpus equi-join per Lloyd round — when the Arrow batch
-    already held it; the pass-through trades a few extra Arrow bytes for
-    removing that shuffle join entirely (guide §2.4)."""
-    import numpy as np
-    import pandas as pd
-
-    rows = sorted(centroids.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
-    c_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    c_mat = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    c_norms = np.sqrt((c_mat * c_mat).sum(axis=1))
-    bc = vecs.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norms))
-    vec_field = next(f for f in vecs.schema.fields if f.name == "embedding")
-
-    def run(batches):
-        ci, cm, cn = bc.value
-        for pdf in batches:
-            v_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            v_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            v_norms = np.sqrt((v_mat * v_mat).sum(axis=1))
-            cos = np.round((v_mat @ cm.T) / (v_norms[:, None] * cn[None, :]), C.COSINE_ROUND)
-            out = {"vec_id": v_ids, "centroid_id": ci[np.argmax(cos, axis=1)]}
-            if keep_vec:
-                out["embedding"] = pdf["embedding"]
-            yield pd.DataFrame(out)
-
-    schema = "vec_id long, centroid_id long"
-    if keep_vec:
-        schema += f", embedding {vec_field.dataType.simpleString()}"
-    return vecs.select("vec_id", "embedding").mapInPandas(run, schema=schema)
 
 
 def topk_ivf(
@@ -622,29 +582,7 @@ def topk_ivf(
         centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
     assignment = ivf_assign(vecs, centroids)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
-
-    # nprobe nearest centroids per query
-    qc = (
-        with_norm(queries)
-        .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
-        .crossJoin(
-            F.broadcast(
-                with_norm(centroids).select(
-                    F.col("vec_id").alias("centroid_id"),
-                    F.col("embedding").alias("__c"),
-                    F.col("__norm").alias("__cn"),
-                )
-            )
-        )
-        .withColumn("cos", cosine(F.col("__v"), F.col("__c"), F.col("__vn"), F.col("__cn")))
-    )
-    wq = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("centroid_id").asc())
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("vec_id", "centroid_id")
-    )
-
+    probes = _nearest_centroids(queries, centroids, nprobe)
     # candidates = vectors assigned to probed centroids
     cand_ids = probes.join(assignment.withColumnRenamed("vec_id", "neighbor_id"), "centroid_id").select(
         "vec_id", "neighbor_id"
@@ -733,7 +671,7 @@ def kmeans_train(
     for _ in range(iters):
         # ivf_assign's kernel reads the canonical 'embedding' column —
         # rename at the boundary so any vec_col works
-        assign = _ivf_assign_numpy(
+        assign = ivf_assign(
             vecs.select("vec_id", F.col(vec_col).alias("embedding")),
             cents.select(F.col("centroid_id").alias("vec_id"), F.col("c").alias("embedding")),
             keep_vec=True,
@@ -1028,28 +966,7 @@ def topk_ivfpq(
     centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
     assignment = ivf_assign(vecs, centroids)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
-    qc = (
-        with_norm(queries)
-        .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
-        .crossJoin(
-            F.broadcast(
-                with_norm(centroids).select(
-                    F.col("vec_id").alias("centroid_id"),
-                    F.col("embedding").alias("__c"),
-                    F.col("__norm").alias("__cn"),
-                )
-            )
-        )
-        .withColumn("cos", cosine(F.col("__v"), F.col("__c"), F.col("__vn"), F.col("__cn")))
-    )
-    wq = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("vec_id", "centroid_id")
-    )
+    probes = _nearest_centroids(queries, centroids, nprobe)
     cand = probes.join(
         assignment.withColumnRenamed("vec_id", "neighbor_id"), "centroid_id"
     ).select("vec_id", "neighbor_id")

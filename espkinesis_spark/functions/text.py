@@ -1,9 +1,11 @@
 """Text-analysis operators over the documents table.
 
-All JVM-side column expressions (no Python UDFs) — these run inside
-whole-stage codegen and scale linearly with document count: no shuffle at
-all for the per-document ops (tokenize/stats/lang-id/fingerprint), one
-key-partitioned shuffle for any downstream group-by.
+Mostly JVM-side column expressions that run inside whole-stage codegen;
+``lang_id`` and ``fingerprints`` are Arrow-batched ``mapInPandas``
+kernels. Either way the per-document ops (tokenize/stats/lang-id/
+fingerprint) are pure maps that scale linearly with document count with
+no shuffle at all, and any downstream group-by costs one key-partitioned
+shuffle.
 """
 
 from __future__ import annotations
@@ -24,32 +26,14 @@ def _stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(wl, t)))
 
 
-def lang_id(df: DataFrame, text_col: str = "text", impl: str = "numpy") -> DataFrame:
+def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: stopword-hit counts per language, argmax with
     deterministic tie order (en > es > de > fr), 'und' when no hits.
 
-    ``impl='numpy'`` (default) counts hits via set lookups in one Arrow
-    batch pass (a pure map); ``impl='sql'`` keeps the columnar expression
-    form (4 array-filter passes over the token array). Swap in a real model
-    via the same mapInPandas shape without changing the interface.
+    Counts hits via set lookups in one Arrow batch pass (a pure map). Swap
+    in a real model via the same mapInPandas shape without changing the
+    interface.
     """
-    if impl == "numpy":
-        return _lang_id_numpy(df, text_col)
-    toks = tokens(F.col(text_col))
-    counts = {lg: _stopword_hits(toks, ws) for lg, ws in C.LANG_STOPWORDS.items()}
-    en, es, de, fr = (counts[lg] for lg in C.LANG_ORDER)
-    pred = (
-        F.when(F.greatest(en, es, de, fr) == 0, "und")
-        .when(en >= F.greatest(es, de, fr), "en")
-        .when(es >= F.greatest(de, fr), "es")
-        .when(de >= fr, "de")
-        .otherwise("fr")
-    )
-    return df.withColumn("lang_pred", pred)
-
-
-def _lang_id_numpy(df: DataFrame, text_col: str) -> DataFrame:
-    """Kernel form of ``lang_id`` (identical tie semantics)."""
     import re
 
     import pandas as pd
@@ -125,7 +109,7 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text", impl: str = "numpy") -> DataFrame:
+def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Two document fingerprints:
 
     * ``fp_key``  — OpenRefine-style key collision fingerprint: md5 of the
@@ -133,27 +117,12 @@ def fingerprints(df: DataFrame, text_col: str = "text", impl: str = "numpy") -> 
     * ``fp_roll`` — polynomial rolling hash ``h = (h*131 + code) % 1e9+7``
       over the first 64 characters (order-sensitive prefix identity).
 
-    ``impl='numpy'`` (default): Arrow-batched kernel. The expression form
-    (``impl='sql'``) unrolls a 64-step fold into one enormous codegen
-    method whose JIT compile intermittently stalls for seconds — the
-    kernel is also a pure map, so nothing is lost at scale.
+    An Arrow-batched kernel: the expression form unrolls a 64-step fold
+    into one enormous codegen method whose JIT compile intermittently
+    stalls for seconds, and the kernel is a pure map, so nothing is lost
+    at scale. UTF-8 byte order (the oracle's list_sort) equals code-point
+    order (Python sorted), so the key fingerprint matches for any input.
     """
-    if impl == "numpy":
-        return _fingerprints_numpy(df, text_col)
-    toks = tokens(F.lower(F.col(text_col)))
-    fp_key = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks))))
-    fp_roll = F.expr(
-        f"aggregate(transform(sequence(1, least(length({text_col}), {C.ROLLING_MAX_CHARS})),"
-        f" i -> ascii(substring({text_col}, i, 1))),"
-        f" CAST(0 AS BIGINT), (h, c) -> (h * {C.ROLLING_BASE} + c) % {C.ROLLING_MOD})"
-    )
-    return df.select("doc_id", fp_key.alias("fp_key"), fp_roll.alias("fp_roll"))
-
-
-def _fingerprints_numpy(df: DataFrame, text_col: str) -> DataFrame:
-    """Kernel form of ``fingerprints`` — bit-identical to the SQL path.
-    UTF-8 byte order (Spark array_sort) equals code-point order (Python
-    sorted), so the key fingerprint matches for any input."""
     import hashlib
     import re
 

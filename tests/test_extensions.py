@@ -153,39 +153,87 @@ def test_dedup_clusters_chain_and_disjoint(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)}
 
 
-def test_dedup_clusters_star_equals_minlabel(spark):
-    """Star alternation and min-label propagation must agree on a mixed
-    graph (chains + shared hubs + disjoint components)."""
-    edges = (
-        [(i, i + 1) for i in range(100, 120)]  # 21-node chain
-        + [(200, 200 + i) for i in range(1, 8)]  # star hub
-        + [(300, 301), (301, 302), (300, 302)]  # triangle
-        + [(7, 400), (400, 8)]  # bridge joining small ids
-    )
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    star = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs, impl="star").collect()}
-    minl = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs, impl="minlabel").collect()}
-    assert star == minl and len(star) > 0
-
-
 def test_dedup_clusters_star_handles_long_chain_in_log_rounds(spark):
     """A 64-node chain has diameter 63; the star alternation must converge
     inside its ceil(log2 n)+2 round budget (min-label would need 63)."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long"
     )
-    got = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs, impl="star").collect()}
+    got = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs).collect()}
     assert got == {(i, 1) for i in range(1, 65)}
 
 
-def test_dedup_clusters_minlabel_raises_when_budget_exhausted(spark):
-    import pytest
-
+def test_dedup_clusters_raises_when_budget_exhausted(spark):
+    """One round cannot contract the 64-chain to stars: the budget check
+    must raise instead of returning split clusters."""
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dedup_clusters(pairs, impl="minlabel", max_iters=3)
+    with pytest.raises(RuntimeError, match="not a fixpoint"):
+        dedup.dedup_clusters(pairs, max_iters=1)
+
+
+def _components_min(edges):
+    """Union-find reference: {node: min node of its component} over the
+    non-self-loop edges (dedup_clusters drops self-loops up front)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum
+    return {x: find(x) for x in parent}
+
+
+class TestDedupClustersProperty:
+    """Property: dedup_clusters equals a union-find over random small edge
+    lists (chains, hubs, duplicate and reversed edges, self-loops)."""
+
+    @pytest.fixture(autouse=True)
+    def _stash(self, spark):
+        TestDedupClustersProperty._spark = spark
+
+    def test_matches_union_find(self):
+        from hypothesis import given, settings
+        from hypothesis import strategies as st
+
+        spark = TestDedupClustersProperty._spark
+        node = st.integers(0, 24)
+        chain = st.tuples(node, st.integers(1, 10)).map(
+            lambda t: [(t[0] + i, t[0] + i + 1) for i in range(t[1])]
+        )
+        hub = st.tuples(node, st.lists(node, min_size=1, max_size=6)).map(
+            lambda t: [(t[0], x) for x in t[1]]
+        )
+        loose = st.lists(st.tuples(node, node), max_size=8)  # dups, self-loops
+        part = st.one_of(chain, hub, loose).flatmap(
+            lambda es: st.sampled_from([es, [(b, a) for a, b in es], es + es])
+        )
+        graph = st.lists(part, min_size=1, max_size=4).map(
+            lambda parts: [e for p in parts for e in p]
+        )
+
+        @settings(max_examples=12, deadline=None)
+        @given(graph)
+        def run(edges):
+            pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+            got = {
+                r["doc_id"]: r["cluster_id"]
+                for r in dedup.dedup_clusters(pairs).collect()
+            }
+            assert got == _components_min(edges)
+
+        run()
 
 
 def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):

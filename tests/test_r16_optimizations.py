@@ -11,7 +11,7 @@ mysterious oracle diff):
   * ``_pq_assign(keep_sv=True)`` == argmin + join-back-to-sub,
   * the star rounds without large-star's trailing distinct == the
     both-distinct reference form,
-  * ``_ivf_assign_numpy(keep_vec=True)`` == assignment ⋈ corpus,
+  * ``ivf_assign(keep_vec=True)`` == assignment ⋈ corpus,
   * ex_pagerank's numeric node relabeling == the string-key trajectory.
 """
 
@@ -123,8 +123,8 @@ def test_dedup_clusters_window_form_components(spark):
 def test_ivf_assign_keep_vec_matches_joinback(spark, sf_dir):
     emb = Q._t(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") % C.IVF_CENTROID_MOD == 0)
-    plain = similarity._ivf_assign_numpy(emb, cents)
-    kept = similarity._ivf_assign_numpy(emb, cents, keep_vec=True)
+    plain = similarity.ivf_assign(emb, cents)
+    kept = similarity.ivf_assign(emb, cents, keep_vec=True)
     assert _sets_equal(
         kept.select("vec_id", "centroid_id"), plain.select("vec_id", "centroid_id")
     )

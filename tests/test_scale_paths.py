@@ -13,9 +13,10 @@ def _pairs_set(df):
     return {(r["vec_a"], r["vec_b"], r["cos"]) for r in df.collect()}
 
 
-def test_blocked_neardup_equals_broadcast(spark, sf_dir):
+def test_blocked_neardup_equals_broadcast(spark, sf_dir, monkeypatch):
     vecs = load_table(spark, sf_dir, "embeddings")
-    full = _pairs_set(similarity.neardup_cosine(vecs, impl="numpy"))
+    monkeypatch.setattr(similarity, "NEARDUP_BROADCAST_BYTES", 1 << 60)  # force broadcast
+    full = _pairs_set(similarity.neardup_cosine(vecs))
     blocked = _pairs_set(similarity.neardup_cosine_blocked(vecs, n_blocks=3))
     assert blocked == full and len(full) > 0
 
@@ -35,12 +36,13 @@ def test_blocked_neardup_scores_on_executors(spark, sf_dir):
 
 
 def test_neardup_auto_routes_by_size(spark, sf_dir, monkeypatch):
-    """Default impl='auto' must pick the blocked path once the plan-size
+    """neardup_cosine must pick the blocked path once the plan-size
     estimate exceeds the broadcast budget, with identical output."""
     vecs = load_table(spark, sf_dir, "embeddings")
     size = similarity._plan_size_bytes(vecs)
     assert size is not None and size > 0  # parquet scan → real estimate
-    baseline = _pairs_set(similarity.neardup_cosine(vecs, impl="numpy"))
+    monkeypatch.setattr(similarity, "NEARDUP_BROADCAST_BYTES", 1 << 60)  # force broadcast
+    baseline = _pairs_set(similarity.neardup_cosine(vecs))
     # tiny budget → auto must block (and still match)
     monkeypatch.setattr(similarity, "NEARDUP_BROADCAST_BYTES", 1)
     assert _pairs_set(similarity.neardup_cosine(vecs)) == baseline
@@ -49,27 +51,31 @@ def test_neardup_auto_routes_by_size(spark, sf_dir, monkeypatch):
     assert _pairs_set(similarity.neardup_cosine(vecs)) == baseline
 
 
-def test_assign_ids_ranged_equals_window(spark, sf_dir):
+def test_assign_ids_ranged_equals_window(spark, sf_dir, monkeypatch):
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1 << 60)  # force window
     want = {
         (r["c_custkey"], r["reg_id"])
-        for r in ops.assign_ids(cust, "c_custkey", impl="window").collect()
+        for r in ops.assign_ids(cust, "c_custkey").collect()
     }
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1)  # force ranged
     got = {
         (r["c_custkey"], r["reg_id"])
-        for r in ops.assign_ids(cust, "c_custkey", impl="ranged", n_buckets=7).collect()
+        for r in ops.assign_ids(cust, "c_custkey").collect()
     }
     assert got == want and len(want) > 0
 
 
-def test_assign_ids_ranged_has_no_single_partition_exchange(spark, sf_dir):
+def test_assign_ids_ranged_has_no_single_partition_exchange(spark, sf_dir, monkeypatch):
     from espkinesis_spark.plans import audit
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    plan = audit.physical_plan(ops.assign_ids(cust, "c_custkey", impl="ranged", n_buckets=7))
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1)  # force ranged
+    plan = audit.physical_plan(ops.assign_ids(cust, "c_custkey"))
     assert "SinglePartition" not in plan
     # the dimension form, by contrast, is the documented single sort
-    plan_w = audit.physical_plan(ops.assign_ids(cust, "c_custkey", impl="window"))
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1 << 60)  # force window
+    plan_w = audit.physical_plan(ops.assign_ids(cust, "c_custkey"))
     assert "SinglePartition" in plan_w
 
 
@@ -102,7 +108,7 @@ def test_pandas_asof_equals_join_form(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_dedup_apply_shuffle_equals_broadcast(spark, sf_dir):
+def test_dedup_apply_shuffle_equals_broadcast(spark, sf_dir, monkeypatch):
     """The big-drop-set path (shuffled left-anti) must produce exactly the
     broadcast path's survivors, and its plan must contain NO
     BroadcastExchange feeding the anti join — at web-scale dup rates the
@@ -111,8 +117,10 @@ def test_dedup_apply_shuffle_equals_broadcast(spark, sf_dir):
     from espkinesis_spark.plans import audit
 
     docs = load_table(spark, sf_dir, "documents")
-    bc = dedup.dedup_apply(docs, impl="broadcast")
-    sh = dedup.dedup_apply(docs, impl="shuffle")
+    monkeypatch.setattr(dedup, "DEDUP_APPLY_BROADCAST_BYTES", 1 << 60)  # force broadcast
+    bc = dedup.dedup_apply(docs)
+    monkeypatch.setattr(dedup, "DEDUP_APPLY_BROADCAST_BYTES", 1)  # force shuffle
+    sh = dedup.dedup_apply(docs)
     want = {r["doc_id"] for r in bc.select("doc_id").collect()}
     got = {r["doc_id"] for r in sh.select("doc_id").collect()}
     assert got == want and len(want) > 0
