@@ -29,6 +29,8 @@ import sys
 import tempfile
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 LOG4J2_TEMPLATE = """\
 status = error
 appender.console.type = Console
